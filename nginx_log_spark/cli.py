@@ -11,6 +11,8 @@ sections) — the Spark analogue of c/main.c:485-523.
 from __future__ import annotations
 
 import argparse
+import os
+import shutil
 import sys
 import tempfile
 
@@ -36,19 +38,27 @@ def main(argv: list[str] | None = None) -> int:
                          "variants (default: the C tool's exact-3-digit gate)")
     args = ap.parse_args(argv)
 
+    path = args.path
+    if path == "-":
+        # spool stdin's raw bytes to a file Spark can scan: streamed, so
+        # memory stays bounded, and byte-exact, so non-UTF-8 lines parse
+        # as they would from the file itself
+        with tempfile.NamedTemporaryFile("wb", suffix=".log", delete=False) as tmp:
+            shutil.copyfileobj(sys.stdin.buffer, tmp)
+        path = tmp.name
+        try:
+            return _report(args, path)
+        finally:
+            os.unlink(path)
+    return _report(args, path)
+
+
+def _report(args: argparse.Namespace, path: str) -> int:
     from nginx_log_spark.parse import parse_lines, parse_sequences, read_log_lines
     from nginx_log_spark.reports.render import render_full_report
     from nginx_log_spark.session import get_spark
 
     spark = get_spark(app="nginx_log_spark-cli", master=args.master)
-    path = args.path
-    tmp = None
-    if path == "-":
-        tmp = tempfile.NamedTemporaryFile("w", suffix=".log", delete=False)
-        tmp.write(sys.stdin.read())
-        tmp.close()
-        path = tmp.name
-
     s3 = not args.any_digit_status
     if path.endswith(".parquet") or _is_parquet_dir(path):
         parsed = parse_sequences(spark.read.parquet(path), status_3digit=s3)

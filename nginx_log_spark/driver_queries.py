@@ -145,13 +145,19 @@ def _top_oracle(key: str, k: int = 100) -> str:
         FROM agg, tot ORDER BY cnt DESC, {key} LIMIT {k}"""
 
 
+def _report(spark, sf, name: str) -> DataFrame:
+    """One frame of reports.all_reports — the views of the fused ranking
+    that the CLI renders from, so the oracle grades the engine users run."""
+    return R.all_reports(_valid_logs(spark, sf), 100)[name]
+
+
 def log_top_ips(spark, sf):
     """来访IP统计 (c/main.c:499): top-100 IPs by hits + pct."""
-    return R.top_counts(_valid_logs(spark, sf), "remote_addr", 100)
+    return _report(spark, sf, "top_ips")
 
 
 def log_top_requests(spark, sf):
-    return R.top_counts(_valid_logs(spark, sf), "request", 100)
+    return _report(spark, sf, "top_requests")
 
 
 # --- registry consolidation (round 3) ------------------------------------
@@ -178,11 +184,12 @@ def log_top_dims(spark, sf):
     """All eight count-by-key report dims of the reference in one composite
     (来访IP/请求/用户/Referer/UA/XFF统计 c/main.c:499-515, status counts,
     per-second time histogram c/main.c:462): per dim the exact top-100 by
-    (cnt desc, key asc) with pct — each branch is R.top_counts, the
-    TakeOrderedAndProject plan asserted in tests/test_plans.py."""
-    v = _valid_logs(spark, sf)
+    (cnt desc, key asc) with pct — each branch is one all_reports view, so
+    the eight branches share one fused job."""
+    frames = R.all_reports(_valid_logs(spark, sf), 100)
+    name = {key: n for n, key in R.REPORT_KEYS.items()}
     parts = [
-        R.top_counts(v, key, 100).select(
+        frames[name[key]].select(
             F.lit(key).alias("dim"), F.col(key).alias("key"), "cnt", "pct"
         )
         for key in _TOP_DIM_KEYS
@@ -200,7 +207,7 @@ def log_top_dims(spark, sf):
         COUNT(DISTINCT remote_addr) AS unique_ips FROM v""",
 )
 def log_totals(spark, sf):
-    return R.totals(_valid_logs(spark, sf))
+    return _report(spark, sf, "totals")
 
 
 @_register(
@@ -213,7 +220,7 @@ def log_totals(spark, sf):
 )
 def log_bytes_by_request(spark, sf):
     """HTTP流量占比统计: weighted agg (c/main.c:468)."""
-    return R.bytes_by_request(_valid_logs(spark, sf), 100)
+    return _report(spark, sf, "bytes_by_request")
 
 
 @_register(
@@ -232,7 +239,7 @@ def log_bytes_by_request(spark, sf):
 )
 def log_bad_code_breakdown(spark, sf):
     """Per-bad-code request breakdown (c/main.c:469-477, 323-360)."""
-    return R.bad_code_breakdown(_valid_logs(spark, sf), 100)
+    return _report(spark, sf, "bad_code_breakdown")
 
 
 @_register(
@@ -243,8 +250,8 @@ def log_bad_code_breakdown(spark, sf):
         GROUP BY 1""",
 )
 def log_hourly_traffic(spark, sf):
-    """North-star hourly rollup — engine side parses time_local back to ts."""
-    h = R.hourly_traffic(_valid_logs(spark, sf))
+    """North-star hourly rollup: the fused hourly dim, every UTC hour."""
+    h = _report(spark, sf, "hourly_traffic")
     return h.select(
         F.date_format("hour", "yyyy-MM-dd HH").alias("hour"), "hits", "bytes"
     )

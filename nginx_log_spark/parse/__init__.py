@@ -9,17 +9,14 @@ from nginx_log_spark.parse.parser import (  # noqa: F401
     CORE_PATTERN,
     PARSED_FIELDS,
     decode_tokens,
-    parsed_schema,
 )
 from nginx_log_spark.parse.text_source import (  # noqa: F401
     codec_splittable,
     read_log_lines,
 )
-from nginx_log_spark.parse.parser import parse_lines as parse_lines_pandas  # noqa: F401
-from nginx_log_spark.parse.parser import parse_sequences as parse_sequences_pandas  # noqa: F401
 
-# engine defaults: the Arrow-native two-tier parser (RE2 strict path +
-# exact-atomic-regex fallback) — same semantics as the pandas path, ~20x
-# the throughput (see tests/test_arrow_parser.py for the parity proof)
+# the engine parser: the Arrow-native two-tier parser (RE2 strict path +
+# exact-atomic-regex fallback; tests/test_arrow_parser.py fuzzes it against
+# oracle.py)
 parse_sequences = parse_sequences_arrow
 parse_lines = parse_lines_arrow

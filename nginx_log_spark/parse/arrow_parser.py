@@ -1,6 +1,6 @@
 """Vectorized Arrow-native parser — the engine's hot path.
 
-Two-tier design (exactly the reference's semantics, 100x its pandas cost):
+Two-tier design (exactly the reference's semantics):
 
 - STRICT tier (C++/RE2, ``pyarrow.compute.extract_regex``): the canonical
   combined format with single spaces. Works on BINARY arrays built
@@ -31,7 +31,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
-from nginx_log_spark.parse.parser import _CORE_RE, PARSED_FIELDS, parsed_schema
+from nginx_log_spark.parse.parser import _CORE_RE, PARSED_FIELDS
 
 FIELD_NAMES = [n for n, _ in PARSED_FIELDS[:9]]
 
@@ -160,7 +160,7 @@ def _parse_binary_lines(
 ) -> dict[str, pa.Array]:
     """BinaryArray of raw lines -> {field: Array} + 'valid' (the full
     two-tier parse). Field arrays are utf8 (latin-1 transcoding for any
-    non-UTF8 bytes, matching the pandas path).
+    non-UTF8 bytes, matching ``parser.decode_tokens``).
 
     ``needed``: projection pushdown INTO the kernel (None = all fields).
     Validity is always computed with the identical two-tier rule; the

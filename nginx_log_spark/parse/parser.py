@@ -1,8 +1,10 @@
-"""Vectorized nginx combined-format parser (the engine's core operator).
+"""The exact parse regex and the token codecs.
 
-Reproduces the reference's cursor-parser semantics (c/main.c:47-114,407-455)
-byte-for-byte with ONE anchored regex per line, evaluated inside an
-Arrow-batched pandas UDF — no per-row Python.
+``CORE_PATTERN`` reproduces the reference's cursor-parser semantics
+(c/main.c:47-114,407-455) byte-for-byte with ONE anchored regex per line.
+It is the EXACT (fallback) tier of the engine parser,
+``arrow_parser.parse_sequences_arrow``, for lines the RE2 strict tier does
+not take; ``oracle.py`` is the semantic reference both are fuzzed against.
 
 Why the regex is exactly equivalent to the C combinators:
 
@@ -34,7 +36,6 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -78,10 +79,6 @@ PARSED_FIELDS = [
 ]
 
 
-def parsed_schema() -> T.StructType:
-    return T.StructType([T.StructField(n, t, True) for n, t in PARSED_FIELDS])
-
-
 # ---------------------------------------------------------------------------
 # token decode: array<int32> of UTF-8 bytes -> latin-1 string (1 byte = 1 char,
 # lossless; parsing is byte-oriented exactly like the reference)
@@ -116,83 +113,3 @@ def encode_lines(lines: pd.Series) -> pd.Series:
     """string -> array<int32> byte tokens (inverse of decode_tokens)."""
     enc = lines.str.encode("latin-1")
     return enc.map(lambda b: np.frombuffer(b, dtype=np.uint8).astype(np.int32))
-
-
-# ---------------------------------------------------------------------------
-# the parse operator
-# ---------------------------------------------------------------------------
-
-
-def _parse_pdf(lines: pd.Series) -> pd.DataFrame:
-    ext = lines.str.extract(_CORE_RE)  # 9 capture groups, NaN on reject
-    ext.columns = [n for n, _ in PARSED_FIELDS[:9]]
-    valid = ext["remote_addr"].notna() & (ext["status"].str.len() == 3)
-    mask = np.broadcast_to(valid.to_numpy(dtype=bool)[:, None], ext.shape)
-    ext = ext.where(mask)  # null out rejected rows
-    body = pd.to_numeric(ext["body_bytes_sent"], errors="coerce").astype("Int64")
-    ext["body_bytes_sent"] = body
-    ext["valid"] = valid
-    return ext
-
-
-def _make_parse_udf():
-    @F.pandas_udf(parsed_schema())
-    def parse_struct(lines: pd.Series) -> pd.DataFrame:
-        return _parse_pdf(lines)
-
-    return parse_struct
-
-
-def _make_parse_tokens_udf():
-    @F.pandas_udf(parsed_schema())
-    def parse_tokens_struct(tok: pd.Series) -> pd.DataFrame:
-        return _parse_pdf(_tokens_to_lines(tok))
-
-    return parse_tokens_struct
-
-
-def parse_lines(df: DataFrame, line_col: str = "line") -> DataFrame:
-    """Parse a string column of raw log lines; adds the 9 fields + `valid`."""
-    udf = _make_parse_udf()
-    return df.withColumn("_p", udf(F.col(line_col))).select("*", "_p.*").drop("_p")
-
-
-def parse_sequences(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Parse the pre-tokenized input table (doc_id, tokens, n_tok, source).
-
-    One Arrow round-trip: tokens -> line (vectorized decode) -> regex extract,
-    all inside a single pandas UDF so the bytes never cross Python twice.
-    Token arrays pass through UNTOUCHED (per-row invariant: routed output
-    tokens must equal input tokens exactly).
-    """
-    udf = _make_parse_tokens_udf()
-    return df.withColumn("_p", udf(F.col(tokens_col))).select("*", "_p.*").drop("_p")
-
-
-# ---------------------------------------------------------------------------
-# native-JVM fast path (java.util.regex also supports (?>...) and *+):
-# useful when a string `line` column already exists — stays in codegen,
-# no Python at all. Kept for benchmarking / pure-SQL deployments.
-# ---------------------------------------------------------------------------
-
-
-def native_parse_columns(line: Column) -> dict[str, Column]:
-    cols: dict[str, Column] = {}
-    for idx, (name, _) in enumerate(PARSED_FIELDS[:9], start=1):
-        c = F.regexp_extract(line, CORE_PATTERN, idx)
-        # regexp_extract returns '' on no-match; disambiguate via a match test
-        cols[name] = c
-    matched = line.rlike(CORE_PATTERN)
-    valid = matched & (F.length(cols["status"]) == 3)
-    out = {
-        n: F.when(valid, c).otherwise(F.lit(None)) for n, c in cols.items()
-    }
-    out["body_bytes_sent"] = out["body_bytes_sent"].cast("long")
-    out["valid"] = valid
-    return out
-
-
-def parse_lines_native(df: DataFrame, line_col: str = "line") -> DataFrame:
-    for name, col in native_parse_columns(F.col(line_col)).items():
-        df = df.withColumn(name, col)
-    return df

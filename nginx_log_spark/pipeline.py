@@ -2,8 +2,8 @@
 
 The Spark restatement of the reference's single fused pass (c/main.c:407-478):
 one scan feeds parse; the parsed intermediate is cached once and fans out to
-the routed sinks and every report — the multi-aggregate sharing the C code
-gets from hand fusion, we get from ``persist``.
+the routed sinks and to the reports, which are views of one fused ranking job
+(``reports.all_reports``).
 """
 
 from __future__ import annotations

@@ -1,10 +1,5 @@
 from nginx_log_spark.reports.reports import (  # noqa: F401
     REPORT_KEYS,
-    bad_code_breakdown,
-    bad_code_sections,
-    bytes_by_request,
-    hourly_traffic,
+    all_reports,
     time_local_to_ts,
-    top_counts,
-    totals,
 )

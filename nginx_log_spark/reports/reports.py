@@ -1,22 +1,31 @@
-"""The reference's aggregate reports as lazy DataFrame functions.
+"""The reference's aggregate reports: one fused ranking, many views.
 
-Each mirrors one hash-table aggregate of the reference's single pass
-(c/main.c:460-477) plus its report-time sort/top-K (c/main.c:246-360).
-All take the PARSED DataFrame (output of ``parse_sequences``/``parse_lines``,
-already filtered to ``valid``) and return unexecuted DataFrames, so callers
-can fuse them off one cached parsed intermediate — the Spark analogue of the
-reference computing 10 aggregates in one scan.
+The reference fills about ten hash tables in one pass (c/main.c:460-477)
+and prints top-K tables from them (c/main.c:246-360). Here one fused job
+does the same: ``fused_reports`` (over parsed rows) or
+``fused_reports_arrow`` (parse + partial aggregation in one Arrow pass
+over the token table) emits (dim, key) partials, and ``_rank_partials``
+merges and ranks them. ``all_reports`` derives every report frame from
+that one result, so the CLI, the pipeline and the graded ``log_*``
+queries read the same engine.
 
 Scale notes (100 TB):
-- every report is groupBy(low-cardinality key) -> partial+final hash agg:
-  one shuffle of ~10^3-10^5 aggregated rows, never of raw rows;
-- top-K is orderBy+limit over the AGGREGATED rows => Spark plans
-  TakeOrderedAndProject (a bounded heap per partition + driver merge —
-  the same algorithm as the reference's Nim/C++ top_k, main.nim:157-169);
-- percentages use a broadcast 1-row totals join, not a window over a
-  single partition;
+- the only shuffle carries map-side-aggregated (dim, key) partials, never
+  raw rows;
+- the per-dim top-K is two-phase: a window over (dim, section, hash
+  bucket of the key) keeps each bucket's top k by count and by bytes, and
+  the exact ranks are computed on those survivors, so no task sorts a
+  whole dimension (the per-second time dim is near row-sized);
+- section totals (header totals, per-code subtotals) come from a ~10^2-row
+  aggregate broadcast back, not from the ranking window;
+- the views are filters and projections of the persisted fused result
+  (about k rows per ranked section plus one row per hour), so the 11
+  report frames cost one fused job;
 - tie order: the reference's qsort is unstable (c/hash.c:173-200); we fix
   (cnt desc, key asc) as the canonical deterministic order (SURVEY.md §2.6).
+
+``method_path_stats`` and ``error_burst_zscore`` are extension reports the
+reference does not have; they are separate queries over the parsed rows.
 """
 
 from __future__ import annotations
@@ -40,123 +49,8 @@ REPORT_KEYS = {
 }
 
 
-def totals(parsed: DataFrame) -> DataFrame:
-    """Header totals: accepted lines, bytes, distinct IPs (c/main.c:487-494)."""
-    return parsed.agg(
-        F.count(F.lit(1)).alias("total_lines"),
-        F.sum("body_bytes_sent").alias("total_bytes_sent"),
-        F.countDistinct("remote_addr").alias("unique_ips"),
-    )
-
-
-def _with_pct(agg: DataFrame, num_col: str, denom: DataFrame, denom_col: str) -> DataFrame:
-    """pct = num/denom*100 via a broadcast 1-row join (no single-partition window)."""
-    return agg.crossJoin(F.broadcast(denom)).withColumn(
-        "pct", F.round(F.col(num_col) / F.col(denom_col) * 100.0, 2)
-    )
-
-
-def top_counts(parsed: DataFrame, key: str, k: int = TOP_K) -> DataFrame:
-    """groupBy(key).count() -> top-K by (cnt desc, key asc) + pct of total.
-
-    The reference: incr(table, key, 1) per line (c/main.c:460-467), then
-    sort desc + truncate at 100 with per-row percentage (c/main.c:246-278).
-    """
-    agg = parsed.groupBy(key).agg(F.count(F.lit(1)).alias("cnt"))
-    tot = parsed.agg(F.count(F.lit(1)).alias("_tot"))
-    return (
-        _with_pct(agg, "cnt", tot, "_tot")
-        .select(key, "cnt", "pct")
-        .orderBy(F.desc("cnt"), F.asc(key))
-        .limit(k)
-    )
-
-
-def bytes_by_request(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
-    """sum(body_bytes_sent) by request line, top-K, pct of total bytes
-    (c/main.c:468 weighted incr + print_sent_long c/main.c:280-321)."""
-    agg = parsed.groupBy("request").agg(F.sum("body_bytes_sent").alias("bytes"))
-    tot = parsed.agg(F.sum("body_bytes_sent").alias("_tot"))
-    return (
-        _with_pct(agg, "bytes", tot, "_tot")
-        .select("request", "bytes", "pct")
-        .orderBy(F.desc("bytes"), F.asc("request"))
-        .limit(k)
-    )
-
-
-def bad_code_breakdown(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Per-bad-status top-K requests (c/main.c:469-477 nested tables +
-    print_code_long c/main.c:323-360).
-
-    One groupBy(status, request) replaces the reference's 999 sub-tables;
-    the per-section top-K is the one genuinely windowed operator — ranked
-    two-phase (pre-rank within (status, hash-bucket of request), exact rank
-    on the ≤ k·buckets survivors) so no single task ever sorts a hot status
-    code's full aggregate, matching the fused path's scale shape
-    (_rank_partials). Section totals come from a ~10²-row broadcast
-    aggregate, not the big window. Output is ordered (status asc, cnt desc,
-    request asc) like the section loop at c/main.c:517-523.
-    """
-    agg = (
-        parsed.filter(F.col("status") != "200")
-        .groupBy("status", "request")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    tot = parsed.agg(F.count(F.lit(1)).alias("_tot"))
-    sect = agg.groupBy(F.col("status").alias("_ss")).agg(
-        F.sum("cnt").alias("section_total")
-    )
-    buckets = 64
-    pre_w = W.partitionBy("status", F.pmod(F.xxhash64("request"), F.lit(buckets)))
-    sec = W.partitionBy("status")
-    ranked = (
-        agg.withColumn(
-            "_rn1", F.row_number().over(pre_w.orderBy(F.desc("cnt"), F.asc("request")))
-        )
-        .filter(F.col("_rn1") <= k)
-        .drop("_rn1")
-        .withColumn(
-            "rn",
-            F.row_number().over(sec.orderBy(F.desc("cnt"), F.asc("request"))),
-        )
-        .filter(F.col("rn") <= k)
-        .join(F.broadcast(sect), F.col("status") == F.col("_ss"))
-        .drop("_ss")
-    )
-    return (
-        ranked.crossJoin(F.broadcast(tot))
-        .select(
-            "status",
-            "request",
-            "cnt",
-            "section_total",
-            F.round(F.col("cnt") / F.col("section_total") * 100.0, 2).alias("pct_of_section"),
-            F.round(F.col("section_total") / F.col("_tot") * 100.0, 2).alias("section_pct_of_total"),
-        )
-        .orderBy(F.asc("status"), F.desc("cnt"), F.asc("request"))
-    )
-
-
-def bad_code_sections(parsed: DataFrame) -> DataFrame:
-    """Section headers: per bad code, hits + pct of all lines (c/main.c:332)."""
-    agg = (
-        parsed.filter(F.col("status") != "200")
-        .groupBy("status")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    tot = parsed.agg(F.count(F.lit(1)).alias("_tot"))
-    return (
-        _with_pct(agg, "hits", tot, "_tot")
-        .select("status", "hits", "pct")
-        .orderBy(F.asc("status"))
-    )
-
-
-# ---------------------------------------------------------------------------
 # time: the reference groups the RAW time_local string (second granularity,
-# c/main.c:462); the hourly rollup is the north-star addition.
-# ---------------------------------------------------------------------------
+# c/main.c:462); the hourly dim is the north-star addition.
 
 _TIME_FMT = "dd/MMM/yyyy:HH:mm:ss Z"
 
@@ -164,22 +58,6 @@ _TIME_FMT = "dd/MMM/yyyy:HH:mm:ss Z"
 def time_local_to_ts(col):
     """'10/Oct/2000:13:55:36 +0000' -> timestamp (null if unparseable)."""
     return F.to_timestamp(col, _TIME_FMT)
-
-
-def hourly_traffic(parsed: DataFrame) -> DataFrame:
-    """Requests + bytes per UTC hour bucket (north-star hourly report).
-    Rows with an unparseable time_local are dropped (the fused dim drops
-    null keys the same way, so the two APIs agree on any input)."""
-    return (
-        parsed.withColumn("ts", time_local_to_ts(F.col("time_local")))
-        .filter(F.col("ts").isNotNull())
-        .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
-        .agg(
-            F.count(F.lit(1)).alias("hits"),
-            F.sum("body_bytes_sent").alias("bytes"),
-        )
-        .orderBy("hour")
-    )
 
 
 def error_burst_zscore(
@@ -263,11 +141,11 @@ _FUSED_DIMS = [
     "top_ips", "top_users", "top_xff", "top_requests", "top_uas",
     "top_referers", "top_times", "status_counts", "hourly", "bad_code",
 ]
-# bad_code composite key: status ++ SEP ++ request. status is ALWAYS exactly
-# 3 digits (the C gate, c/main.c:433-437), so the split back is positional
-# (substring 1-3 / 5-) — wrap-string fields like request may legally contain
-# \x01 (any byte but the closing quote survives, c/main.c:104), so splitting
-# AT the separator would truncate such requests.
+# bad_code composite key: status ++ SEP ++ request. status is a digit run
+# (3 digits under the C gate, c/main.c:433-437, any length with
+# status_3digit=False), so the FIRST separator is the split point; the
+# request may legally contain \x01 (any byte but the closing quote
+# survives, c/main.c:104), so the split keeps everything after it.
 _SEP = "\x01"
 
 
@@ -287,15 +165,16 @@ def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
     section_keys, rn, rn_bytes) — key2 = request within bad_code sections
     (key = status). Header totals ride along: section_total of any plain
     dim == total lines, section_bytes == total bytes, section_keys of
-    top_ips == unique IPs (c/main.c:487-494).
+    top_ips == unique IPs (c/main.c:487-494). The hourly dim keeps every
+    hour, not just the top k.
     """
     keys = [
         F.col("remote_addr"), F.col("remote_user"), F.col("http_x_forwarded_for"),
         F.col("request"), F.col("http_user_agent"), F.col("http_referer"),
         F.col("time_local"), F.col("status"),
-        # hourly: UTC hour bucket, offset-aware like hourly_traffic (mixed
-        # timezone offsets fold into the same UTC hour); unparseable -> null
-        # -> dropped by the explode filter
+        # hourly: UTC hour bucket, offset-aware (mixed timezone offsets
+        # fold into the same UTC hour); unparseable -> null -> dropped by
+        # the explode filter
         F.date_format(
             F.date_trunc("hour", time_local_to_ts(F.col("time_local"))),
             "yyyy-MM-dd HH",
@@ -334,6 +213,9 @@ def _rank_partials(agg: DataFrame, k: int, buckets: int = 64) -> DataFrame:
     `rn <= k` / `rn_bytes <= k` consumer sees identical rows and ranks as
     the one-window plan, for every dim.
 
+    The hourly dim is a full report, not a top-K one: its rows pass both
+    cuts (at most 8,760 hours a year, so the phase-2 window stays small).
+
     Section totals (header totals / per-code subtotals, c/main.c:487-494,
     :326-331) come from a separate ~10²-row aggregate broadcast back, not
     from the big window.
@@ -342,25 +224,29 @@ def _rank_partials(agg: DataFrame, k: int, buckets: int = 64) -> DataFrame:
         F.sum("cnt").alias("cnt"), F.sum("bytes").alias("bytes")
     )
     is_bad = F.col("dim_id") == 9
+    is_hourly = F.col("dim_id") == 8
+    bad = F.split(F.col("key0"), _SEP, 2)  # [status, request] (see _SEP note)
     named = agg.select(
         F.element_at(F.array(*[F.lit(d) for d in _FUSED_DIMS]), F.col("dim_id") + 1).alias("dim"),
         F.col("dim_id"),
-        # positional split: status is exactly 3 digits (see _SEP note)
-        F.when(is_bad, F.substring(F.col("key0"), 1, 3)).otherwise(F.col("key0")).alias("key"),
-        F.when(is_bad, F.expr("substring(key0, 5)")).alias("key2"),
+        F.when(is_bad, bad[0]).otherwise(F.col("key0")).alias("key"),
+        F.when(is_bad, bad[1]).alias("key2"),
         F.col("key0"),
         "cnt",
         "bytes",
     )
-    sect_key = F.when(F.col("dim_id") == 9, F.col("key"))
-    sect = named.groupBy(F.col("dim_id").alias("_sd"), sect_key.alias("_sk")).agg(
+    # window partition keys as plain columns, so the two windows of each
+    # phase share one exchange (partition expressions would each be
+    # re-aliased and re-shuffled)
+    named = named.withColumn("_sk", F.when(is_bad, F.col("key"))).withColumn(
+        "_bk", F.pmod(F.xxhash64("key0"), F.lit(buckets))
+    )
+    sect = named.groupBy(F.col("dim_id").alias("_sd"), F.col("_sk").alias("_ss")).agg(
         F.sum("cnt").alias("section_total"),
         F.sum("bytes").alias("section_bytes"),
         F.count(F.lit(1)).alias("section_keys"),
     )
-    wp = W.partitionBy(
-        "dim_id", sect_key, F.pmod(F.xxhash64("key0"), F.lit(buckets))
-    )
+    wp = W.partitionBy("dim_id", "_sk", "_bk")
     pre = (
         named.withColumn(
             "_rn1", F.row_number().over(wp.orderBy(F.desc("cnt"), F.asc("key0")))
@@ -368,18 +254,20 @@ def _rank_partials(agg: DataFrame, k: int, buckets: int = 64) -> DataFrame:
         .withColumn(
             "_rb1", F.row_number().over(wp.orderBy(F.desc("bytes"), F.asc("key0")))
         )
-        .filter((F.col("_rn1") <= k) | (F.col("_rb1") <= k))
-        .drop("_rn1", "_rb1")
+        .filter((F.col("_rn1") <= k) | (F.col("_rb1") <= k) | is_hourly)
     )
-    w = W.partitionBy("dim_id", sect_key)
+    w = W.partitionBy("dim_id", "_sk")
     return (
         pre.withColumn("rn", F.row_number().over(w.orderBy(F.desc("cnt"), F.asc("key0"))))
         .withColumn("rn_bytes", F.row_number().over(w.orderBy(F.desc("bytes"), F.asc("key0"))))
-        .filter((F.col("rn") <= k) | ((F.col("dim_id") == 3) & (F.col("rn_bytes") <= k)))
+        .filter(
+            (F.col("rn") <= k)
+            | ((F.col("dim_id") == 3) & (F.col("rn_bytes") <= k))
+            | is_hourly
+        )
         .join(
             F.broadcast(sect),
-            (F.col("dim_id") == F.col("_sd"))
-            & (sect_key.eqNullSafe(F.col("_sk"))),
+            (F.col("dim_id") == F.col("_sd")) & F.col("_sk").eqNullSafe(F.col("_ss")),
         )
         .select(
             "dim", "dim_id", "key", "key2", "cnt", "bytes",
@@ -507,12 +395,73 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
 
 
 def all_reports(parsed: DataFrame, k: int = TOP_K) -> dict[str, DataFrame]:
-    """The full report set off one (cached) parsed DataFrame."""
-    out = {"totals": totals(parsed)}
+    """The full report set as views of ONE ``fused_reports(parsed, k)``.
+
+    ``parsed`` is the valid-only parsed DataFrame. The fused result is
+    persisted lazily: the first view collected runs the fused job and the
+    other views read its cached rows (a later call over the same plan
+    reuses them too — Spark's cache matches plans). Frames, columns and
+    row order:
+
+    - ``totals``: one row (total_lines, total_bytes_sent, unique_ips), from
+      the top_ips section totals; (0, NULL, 0) on empty input
+      (c/main.c:487-494);
+    - the eight ``REPORT_KEYS`` frames: (key, cnt, pct) by rank;
+    - ``bytes_by_request``: (request, bytes, pct) by the bytes rank
+      (c/main.c:468, 280-321);
+    - ``bad_code_sections``: (status, hits, pct of all lines) by status;
+    - ``bad_code_breakdown``: (status, request, cnt, section_total,
+      pct_of_section, section_pct_of_total) by (status, rank)
+      (c/main.c:469-477, 323-360);
+    - ``hourly_traffic``: (hour, hits, bytes) for every UTC hour, by hour.
+    """
+    # one partition: the result is small, and a single-partition cache
+    # lets the sorted views sort in place instead of range-shuffling
+    f = fused_reports(parsed, k).coalesce(1).persist()
+    dim = lambda name: f.filter(F.col("dim") == name)
+    pct = lambda num, den: F.round(F.col(num) / F.col(den) * 100.0, 2)
+    # a ranked row counts at least one line: line counts are non-null
+    # columns, as count() types them
+    count = lambda c: F.coalesce(F.col(c), F.lit(0))
+
+    # every row of a dim carries its section totals; an empty input has no
+    # rows, and the global aggregate still yields the one header row
+    totals = dim("top_ips").agg(
+        F.coalesce(F.max("section_total"), F.lit(0)).alias("total_lines"),
+        F.max("section_bytes").alias("total_bytes_sent"),
+        F.coalesce(F.max("section_keys"), F.lit(0)).alias("unique_ips"),
+    )
+    out = {"totals": totals}
     for name, key in REPORT_KEYS.items():
-        out[name] = top_counts(parsed, key, k)
-    out["bytes_by_request"] = bytes_by_request(parsed, k)
-    out["bad_code_sections"] = bad_code_sections(parsed)
-    out["bad_code_breakdown"] = bad_code_breakdown(parsed, k)
-    out["hourly_traffic"] = hourly_traffic(parsed)
+        out[name] = (
+            dim(name).orderBy("rn").limit(k)
+            .select(F.col("key").alias(key), count("cnt").alias("cnt"),
+                    pct("cnt", "section_total").alias("pct"))
+        )
+    out["bytes_by_request"] = (
+        dim("top_requests").orderBy("rn_bytes").limit(k)
+        .select(F.col("key").alias("request"), "bytes",
+                pct("bytes", "section_bytes").alias("pct"))
+    )
+    bad = dim("bad_code").crossJoin(totals.select(F.col("total_lines").alias("_tot")))
+    out["bad_code_sections"] = (
+        bad.filter(F.col("rn") == 1).orderBy("key")
+        .select(F.col("key").alias("status"), count("section_total").alias("hits"),
+                pct("section_total", "_tot").alias("pct"))
+    )
+    out["bad_code_breakdown"] = (
+        bad.filter(F.col("rn") <= k).orderBy("key", "rn")
+        .select(
+            F.col("key").alias("status"), F.col("key2").alias("request"),
+            count("cnt").alias("cnt"), "section_total",
+            pct("cnt", "section_total").alias("pct_of_section"),
+            pct("section_total", "_tot").alias("section_pct_of_total"),
+        )
+    )
+    out["hourly_traffic"] = (
+        dim("hourly")
+        .select(F.to_timestamp("key", "yyyy-MM-dd HH").alias("hour"),
+                count("cnt").alias("hits"), "bytes")
+        .orderBy("hour")
+    )
     return out

@@ -20,19 +20,22 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    Parameters are env-overridable so bench.py can run the identical job at
-    two parallelism levels (``SPARK_GRAFT_CPUS``) for the scaling-efficiency
-    evidence required by BASELINE.md.
+    Defaults fit the machine: ``local[N]`` over the cores this process may
+    run on, and a driver heap of a quarter of physical memory. The
+    environment overrides them (``SPARK_GRAFT_MASTER``,
+    ``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM``), so bench.py can run
+    the identical job at two parallelism levels.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    mem_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20  # MemTotal
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     # local[N] → one JVM; match shuffle width to cores. On a real cluster this
     # would be ~2-3x total cores and AQE coalesces the rest.
     if shuffle_partitions is None:
         try:
-            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else 32
+            n = int(master.split("[")[1].rstrip("]*")) if "[" in master else cpus
         except ValueError:
-            n = 32
+            n = cpus
         shuffle_partitions = max(n, 8)
 
     b = (
@@ -45,7 +48,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{mem_mb // 4}m")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # long-lived local sessions: keep the status stores small and GC

@@ -34,8 +34,9 @@ def read_sequence_stream(
 
 
 def stream_hourly_counts(seq_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Watermarked tumbling-hour hits/bytes — the streaming twin of
-    reports.hourly_traffic."""
+    """Watermarked tumbling-hour hits/bytes per status — the streaming twin
+    of the hourly dim of reports.fused_reports (all_reports' hourly_traffic
+    view)."""
     parsed = parse_sequences(seq_stream).filter(F.col("valid"))
     with_ts = parsed.withColumn("ts", time_local_to_ts(F.col("time_local")))
     return (

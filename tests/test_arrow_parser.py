@@ -165,23 +165,6 @@ def test_sliced_list_array():
     assert got == exp
 
 
-def test_spark_arrow_parse_matches_pandas_parse(spark):
-    """Both engine parsers agree end-to-end on Spark."""
-    from nginx_log_spark.parse.arrow_parser import parse_sequences_arrow
-    from nginx_log_spark.parse.parser import parse_sequences
-
-    seq = loggen.sequences_df(spark, 3000, partitions=4)
-    a = parse_sequences_arrow(seq).toPandas().sort_values("doc_id").reset_index(drop=True)
-    b = parse_sequences(seq).toPandas().sort_values("doc_id").reset_index(drop=True)
-    assert (a.valid == b.valid).all()
-    for k in ("remote_addr", "request", "status", "http_user_agent"):
-        assert (a[k].fillna(NULL) == b[k].fillna(NULL)).all(), k
-    assert (a.body_bytes_sent.fillna(-1) == b.body_bytes_sent.fillna(-1)).all()
-    # tokens pass through untouched
-    exp = loggen.sequences_pandas(np.arange(3000, dtype=np.uint64))
-    assert all((np.asarray(x) == y).all() for x, y in zip(a.tokens, exp.tokens))
-
-
 def test_parse_lines_arrow(spark):
     from nginx_log_spark.parse.arrow_parser import parse_lines_arrow
 
@@ -216,8 +199,8 @@ def test_parse_tier_stats(spark):
 
 
 def test_high_bytes_transcode():
-    """Bytes >127 in wrap fields: latin-1 transcoding, identical to the
-    pandas path's decode."""
+    """Bytes >127 in wrap fields: latin-1 transcoding, identical to
+    parser.decode_tokens."""
     line = b'1.2.3.4 - - [t] "GET /\xe9 HTTP/1.1" 200 5 "r" "UA \xff" "x"'
     arr = pa.array([line], type=pa.binary())
     out = _parse_binary_lines(arr)

@@ -7,7 +7,6 @@ import pandas as pd
 
 from nginx_log_spark.datagen import loggen
 from nginx_log_spark.parse import parse_lines, parse_sequences
-from nginx_log_spark.parse.parser import parse_lines_native
 
 N = 3000
 
@@ -40,14 +39,6 @@ def test_parse_lines_matches_oracle(spark):
     g = _golden()
     df = spark.createDataFrame(g[["doc_id", "line"]])
     pdf = parse_lines(df).toPandas().sort_values("doc_id").reset_index(drop=True)
-    _assert_matches_golden(pdf, g)
-
-
-def test_native_jvm_parser_matches_oracle(spark):
-    """The pure-JVM regexp_extract path must agree with the pandas path."""
-    g = _golden().head(1000)
-    df = spark.createDataFrame(g[["doc_id", "line"]])
-    pdf = parse_lines_native(df).toPandas().sort_values("doc_id").reset_index(drop=True)
     _assert_matches_golden(pdf, g)
 
 

@@ -1,9 +1,9 @@
 """Parser parity tests (SURVEY.md §5.1, §5.4).
 
-The vectorized regex parser must agree with the pure-Python oracle of the
-reference's cursor combinators (c/main.c:47-114) on every line — accepted or
-rejected — and with hand-frozen expectations on the edge lines the C
-semantics make surprising.
+The exact-tier regex (parser.CORE_PATTERN) must agree with the pure-Python
+oracle of the reference's cursor combinators (c/main.c:47-114) on every
+line — accepted or rejected — and with hand-frozen expectations on the
+edge lines the C semantics make surprising.
 """
 
 from __future__ import annotations
@@ -11,11 +11,10 @@ from __future__ import annotations
 import random
 import re
 
-import pandas as pd
 import pytest
 
 from nginx_log_spark.parse import oracle
-from nginx_log_spark.parse.parser import _CORE_RE, _parse_pdf
+from nginx_log_spark.parse.parser import _CORE_RE
 
 hypothesis = pytest.importorskip("hypothesis", reason="hypothesis not installed")
 from hypothesis import given, settings  # noqa: E402
@@ -118,17 +117,6 @@ def test_mutation_fuzz_parity():
 @settings(max_examples=2000, deadline=None)
 def test_hypothesis_parity(s):
     assert regex_parse(s) == oracle.parse_line(s)
-
-
-def test_parse_pdf_vectorized_matches_scalar():
-    lines = pd.Series(list(EDGES))
-    out = _parse_pdf(lines)
-    for i, line in enumerate(EDGES):
-        exp = oracle.parse_line(line)
-        assert bool(out["valid"].iloc[i]) == (exp is not None)
-        if exp:
-            for k, v in exp.items():
-                assert out[k].iloc[i] == v
 
 
 def test_extended_tail_oracle():

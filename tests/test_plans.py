@@ -4,7 +4,7 @@ asserted so a refactor can't silently regress them.
 Each test pins one claim from SURVEY.md §4 / BENCH.md:
   - filters and projections reach the parquet scan (pushdown + pruning)
   - dimension joins broadcast (no fact-side shuffle)
-  - top-K plans TakeOrderedAndProject (no global sort)
+  - the report frames are views of one cached fused ranking
   - candidate-pair joins are equi-joins (never a nested-loop / cartesian)
   - the packing prefix-sum's only single-partition exchange is the tiny
     bucket-totals frame, and the data shuffles exactly once
@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -44,15 +45,21 @@ def test_parquet_filter_and_column_pushdown(spark, sf_dir):
 
 
 def test_top_counts_plans_take_ordered(spark, sf_dir):
+    """all_reports runs the fused ranking once: every frame scans the one
+    persisted fused result and none re-aggregates the parsed rows; the
+    top-count views are a TakeOrderedAndProject over it."""
+    from nginx_log_spark.parity import parsed_log_df
     from nginx_log_spark.reports import reports as R
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").withColumnRenamed(
-        "source", "remote_addr"
-    )
-    p = plan(R.top_counts(df, "remote_addr", 100))
-    assert "TakeOrderedAndProject" in p
-    # the pct denominator is a broadcast of a 1-row agg, not a window
-    assert "BroadcastExchange" in p or "BroadcastNestedLoopJoin" in p
+    frames = R.all_reports(parsed_log_df(spark, sf_dir).filter(F.col("valid")))
+    assert "TakeOrderedAndProject" in plan(frames["top_ips"])
+    for name, df in frames.items():
+        p = plan(df)
+        assert "InMemoryTableScan" in p, name
+        # above the cached relation: filters, projections, tiny sorts only
+        view = p.split("InMemoryRelation")[0]
+        for op in ("MapInArrow", "Generate", "Window"):
+            assert op not in view, (name, op)
 
 
 def test_geoip_enrich_is_broadcast_equi_join(spark, sf_dir):
@@ -120,23 +127,23 @@ def test_rank_partials_has_no_per_dim_single_window(spark):
     p = plan(R._rank_partials(partials, 100))
     # phase-1 window partition spec includes the pmod(xxhash64(...)) bucket
     assert "pmod" in p and "xxhash64" in p
+    # both phase-1 windows (count and bytes order) share ONE exchange
+    assert len(re.findall(r"hashpartitioning\([^)]*_bk", p)) == 1, p
     # section totals ride a broadcast join, not window sums over the big set
     assert "BroadcastExchange" in p
 
 
-def test_bad_code_breakdown_two_phase_rank(spark):
-    """The standalone bad_code_breakdown must share the fused path's scale
-    shape: phase-1 ranking partitions by (status, hash-bucket of request) —
-    never a single task sorting a hot status's whole aggregate — and the
-    section totals ride a broadcast join, not the big window."""
+def test_bad_code_breakdown_two_phase_rank(spark, sf_dir):
+    """The bad_code_breakdown view reads the fused tail's ranking, so it
+    has its scale shape: phase-1 ranking partitions by (status, hash-bucket
+    of request) — never a single task sorting a hot status's whole
+    aggregate — and the section totals ride a broadcast join, not the big
+    window."""
+    from nginx_log_spark.parity import parsed_log_df
     from nginx_log_spark.reports import reports as R
 
-    parsed = spark.createDataFrame(
-        [(f"4{i % 2:02d}", f"GET /r{i} HTTP/1.1") for i in range(200)],
-        "status string, request string",
-    )
-    df = R.bad_code_breakdown(parsed, 10)
-    p = plan(df)
+    parsed = parsed_log_df(spark, sf_dir).filter(F.col("valid"))
+    p = plan(R.all_reports(parsed, 10)["bad_code_breakdown"])
     assert "pmod" in p and "xxhash64" in p
     assert "BroadcastExchange" in p
 
@@ -243,10 +250,13 @@ def test_prefix_jaccard_is_equi_join_on_prefix(spark, docs):
     p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    # bounded verify, not a re-join on shingles: either the array
-    # intersect or (round 6, small-vocabulary gate) the popcount of the
-    # per-doc bitset masks
-    assert "array_intersect" in p or "bit_count" in p, p
+    # bounded verify, not a re-join on shingles: the fixture's vocabulary
+    # is under the mask gate, so the default verifies by popcount of the
+    # per-doc bitset masks; with the gate off it intersects id arrays
+    assert "bit_count" in p and "array_intersect" not in p, p
+    p_arr = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7,
+                                      mask_verify_max=0))
+    assert "array_intersect" in p_arr and "bit_count" not in p_arr, p_arr
 
 
 def test_prefix_jaccard_freq_head_joins_broadcast(spark, docs):

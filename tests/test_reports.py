@@ -1,4 +1,7 @@
-"""Report parity vs a pandas oracle on the golden fixture (SURVEY.md §5.2)."""
+"""Report parity vs a pandas oracle on the golden fixture (SURVEY.md §5.2).
+
+The report frames are the views ``all_reports`` derives from one fused
+ranking; each is checked against the golden fields directly."""
 
 from __future__ import annotations
 
@@ -25,22 +28,27 @@ def parsed(spark):
 
 
 @pytest.fixture(scope="module")
+def frames(parsed):
+    return R.all_reports(parsed, 100)
+
+
+@pytest.fixture(scope="module")
 def gold():
     g = loggen.golden_pandas(N)
     return g[g.valid].reset_index(drop=True)
 
 
-def test_totals(parsed, gold):
-    t = R.totals(parsed).collect()[0]
+def test_totals(frames, gold):
+    t = frames["totals"].collect()[0]
     assert t["total_lines"] == len(gold)
     assert t["total_bytes_sent"] == int(gold.exp_body_bytes_sent.sum())
     assert t["unique_ips"] == gold.exp_remote_addr.nunique()
 
 
 @pytest.mark.parametrize("name", list(R.REPORT_KEYS))
-def test_top_counts(parsed, gold, name):
+def test_top_counts(frames, gold, name):
     key = R.REPORT_KEYS[name]
-    got = R.top_counts(parsed, key, 100).toPandas()
+    got = frames[name].toPandas()
     exp = (
         gold.groupby("exp_" + key).size().reset_index(name="cnt")
         .rename(columns={"exp_" + key: key})
@@ -54,8 +62,8 @@ def test_top_counts(parsed, gold, name):
     assert np.allclose(got.pct, exp_pct, atol=1e-9)
 
 
-def test_bytes_by_request(parsed, gold):
-    got = R.bytes_by_request(parsed, 100).toPandas()
+def test_bytes_by_request(frames, gold):
+    got = frames["bytes_by_request"].toPandas()
     exp = (
         gold.groupby("exp_request").exp_body_bytes_sent.sum().reset_index(name="bytes")
         .rename(columns={"exp_request": "request"})
@@ -65,10 +73,12 @@ def test_bytes_by_request(parsed, gold):
     )
     assert list(got.request) == list(exp.request)
     assert list(got.bytes) == list(exp.bytes)
+    exp_pct = (exp.bytes / gold.exp_body_bytes_sent.sum() * 100).round(2)
+    assert np.allclose(got.pct, exp_pct, atol=1e-9)
 
 
-def test_bad_code_breakdown(parsed, gold):
-    got = R.bad_code_breakdown(parsed, 100).toPandas()
+def test_bad_code_breakdown(frames, gold):
+    got = frames["bad_code_breakdown"].toPandas()
     bad = gold[gold.exp_status != "200"]
     exp = (
         bad.groupby(["exp_status", "exp_request"]).size().reset_index(name="cnt")
@@ -90,8 +100,8 @@ def test_bad_code_breakdown(parsed, gold):
     assert list(got.status) == sorted(got.status, key=str)
 
 
-def test_bad_code_sections(parsed, gold):
-    got = R.bad_code_sections(parsed).toPandas()
+def test_bad_code_sections(frames, gold):
+    got = frames["bad_code_sections"].toPandas()
     exp = (
         gold[gold.exp_status != "200"].groupby("exp_status").size()
         .reset_index(name="hits").rename(columns={"exp_status": "status"})
@@ -99,10 +109,20 @@ def test_bad_code_sections(parsed, gold):
     )
     assert list(got.status) == list(exp.status)
     assert list(got.hits) == list(exp.hits)
+    assert np.allclose(got.pct, (exp.hits / len(gold) * 100).round(2), atol=1e-9)
 
 
-def test_hourly_traffic(parsed, gold):
-    got = R.hourly_traffic(parsed).toPandas()
+def test_all_reports_empty_input(parsed):
+    """No rows: one (0, NULL, 0) header row, every other frame empty."""
+    frames = R.all_reports(parsed.limit(0), 100)
+    assert [tuple(r) for r in frames["totals"].collect()] == [(0, None, 0)]
+    for name, df in frames.items():
+        if name != "totals":
+            assert df.count() == 0, name
+
+
+def test_hourly_traffic(frames, gold):
+    got = frames["hourly_traffic"].toPandas()
     ts = pd.to_datetime(gold.exp_time_local, format="%d/%b/%Y:%H:%M:%S %z", utc=True)
     exp = (
         gold.assign(hour=ts.dt.floor("h").dt.tz_localize(None))
@@ -130,50 +150,46 @@ def test_render_report_smoke(parsed):
 
 
 def test_fused_reports_match_individual(parsed, gold):
-    """The one-shuffle fused query must reproduce every individual report."""
-    fused = R.fused_reports(parsed, 100).toPandas()
-    # plain count dims
+    """The fused rows every view is cut from: each dim carries the header
+    totals and its distinct-key count, and the hourly dim holds every hour
+    (it is a full report, not a top-k one)."""
+    fused = R.fused_reports(parsed, 10).toPandas()
     for name, key in R.REPORT_KEYS.items():
-        f = fused[(fused.dim == name) & (fused.rn <= 100)].sort_values("rn")
-        ind = R.top_counts(parsed, key, 100).toPandas()
-        assert list(f.key) == list(ind[key]), name
-        assert list(f.cnt) == list(ind.cnt), name
+        f = fused[fused.dim == name]
         assert (f.section_total == len(gold)).all(), name
-    # bytes ranking rides on the request dim (rn_bytes)
-    f = fused[(fused.dim == "top_requests") & (fused.rn_bytes <= 100)].sort_values("rn_bytes")
-    ind = R.bytes_by_request(parsed, 100).toPandas()
-    assert list(f.key) == list(ind.request)
-    assert list(f.bytes) == list(ind.bytes)
-    # bad-code dim
-    f = fused[fused.dim == "bad_code"].sort_values(["key", "rn"])
-    ind = R.bad_code_breakdown(parsed, 100).toPandas()
-    assert list(f.key) == list(ind.status)
-    assert list(f.key2) == list(ind.request)
-    assert list(f.cnt) == list(ind.cnt)
-    assert list(f.section_total) == list(ind.section_total)
-    # totals ride along
-    t = R.totals(parsed).collect()[0]
-    ips = fused[fused.dim == "top_ips"]
-    assert ips.section_total.iloc[0] == t["total_lines"]
-    assert ips.section_bytes.iloc[0] == t["total_bytes_sent"]
-    assert ips.section_keys.iloc[0] == t["unique_ips"]
-    # hourly dim matches the timestamp-based report (keys AND counts)
-    f = fused[fused.dim == "hourly"].sort_values("key")
-    ind = R.hourly_traffic(parsed).toPandas().sort_values("hour")
-    assert len(f) == len(ind)
-    assert list(f.key) == [h.strftime("%Y-%m-%d %H") for h in ind.hour]
-    assert list(f.cnt) == list(ind.hits)
-    assert list(f.bytes) == list(ind.bytes)
+        assert (f.section_bytes == gold.exp_body_bytes_sent.sum()).all(), name
+        assert (f.section_keys == gold["exp_" + key].nunique()).all(), name
+    ts = pd.to_datetime(gold.exp_time_local, format="%d/%b/%Y:%H:%M:%S %z", utc=True)
+    exp = ts.dt.floor("h").dt.strftime("%Y-%m-%d %H").value_counts()
+    assert len(exp) > 10  # more hours than k
+    f = fused[fused.dim == "hourly"]
+    assert dict(zip(f.key, f.cnt)) == exp.to_dict()
 
 
 def test_fused_hourly_mixed_offsets(spark):
     """Lines with different timezone offsets that fall in the SAME UTC hour
-    must roll up together in the fused dim, the arrow dim, and
-    hourly_traffic (the round-1 fused dim bucketed local wall-clock)."""
+    must roll up together in the fused dim, the arrow dim, and the
+    hourly_traffic view (the round-1 fused dim bucketed local wall-clock).
+    A log spanning more hours than k keeps every hour in all three."""
     from pyspark.sql import functions as F
 
     from nginx_log_spark.parse import parse_sequences
     from nginx_log_spark.parse.parser import encode_lines
+
+    def hourly(lines, k):
+        df = spark.createDataFrame([(f"d{i}", ln, "s") for i, ln in enumerate(lines)],
+                                   "doc_id string, line string, source string")
+        seq = df.select(
+            "doc_id", encode_lines(F.col("line")).alias("tokens"), "source"
+        ).withColumn("n_tok", F.size("tokens"))
+        parsed = parse_sequences(seq).filter(F.col("valid"))
+        got = [
+            {r["key"]: r["cnt"] for r in fused_df.filter(F.col("dim") == "hourly").collect()}
+            for fused_df in (R.fused_reports(parsed, k), R.fused_reports_arrow(seq, k))
+        ]
+        view = R.all_reports(parsed, k)["hourly_traffic"].collect()
+        got.append({r["hour"].strftime("%Y-%m-%d %H"): r["hits"] for r in view})
+        return got
 
     lines = [
         '10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /a HTTP/1.1" 200 10 "" "u" ""',
@@ -181,28 +197,22 @@ def test_fused_hourly_mixed_offsets(spark):
         '10.0.0.1 - - [10/Oct/2000:08:25:36 -0530] "GET /a HTTP/1.1" 200 10 "" "u" ""',
         '10.0.0.1 - - [10/Oct/2000:20:55:36 +0000] "GET /a HTTP/1.1" 200 10 "" "u" ""',
     ]
-    df = spark.createDataFrame([(f"d{i}", ln, "s") for i, ln in enumerate(lines)],
-                               "doc_id string, line string, source string")
-    seq = df.select(
-        "doc_id", encode_lines(F.col("line")).alias("tokens"), "source"
-    ).withColumn("n_tok", F.size("tokens"))
-    parsed = parse_sequences(seq).filter(F.col("valid"))
-
     exp = {"2000-10-10 13": 3, "2000-10-10 20": 1}
-    for fused_df in (R.fused_reports(parsed), R.fused_reports_arrow(seq)):
-        got = {
-            r["key"]: r["cnt"]
-            for r in fused_df.filter(F.col("dim") == "hourly").collect()
-        }
-        assert got == exp
-    ht = {r["hour"].strftime("%Y-%m-%d %H"): r["hits"]
-          for r in R.hourly_traffic(parsed).collect()}
-    assert ht == exp
+    assert hourly(lines, 100) == [exp] * 3
+
+    # 8 hours with distinct counts and k=5: a top-k cut would drop 3 hours
+    spread = [
+        f'10.0.0.1 - - [10/Oct/2000:{h:02d}:00:00 +0000] "GET /a HTTP/1.1" 200 10 "" "u" ""'
+        for h in range(8) for _ in range(h + 1)
+    ]
+    exp = {f"2000-10-10 {h:02d}": h + 1 for h in range(8)}
+    assert hourly(spread, 5) == [exp] * 3
 
 
 def test_fused_bad_code_sep_byte_in_request(spark):
     """A request containing the \\x01 separator byte must survive the
-    bad_code key round-trip (positional split, not split-at-separator)."""
+    bad_code key round-trip (split at the first separator only), for any
+    status length."""
     from pyspark.sql import functions as F
 
     from nginx_log_spark.parse import parse_sequences
@@ -217,6 +227,15 @@ def test_fused_bad_code_sep_byte_in_request(spark):
     assert len(rows) == 1
     assert rows[0]["key"] == "404"
     assert rows[0]["key2"] == req
+
+    # a 4-digit status (status_3digit=False) splits at the same separator
+    seq4 = spark.createDataFrame([("d0", line.replace(" 404 ", " 4040 "), "s")],
+                                 "doc_id string, line string, source string")
+    seq4 = seq4.select("doc_id", encode_lines(F.col("line")).alias("tokens"), "source")
+    parsed4 = parse_sequences(seq4.withColumn("n_tok", F.size("tokens")),
+                              status_3digit=False).filter(F.col("valid"))
+    rows = R.fused_reports(parsed4).filter(F.col("dim") == "bad_code").collect()
+    assert [(r["key"], r["key2"]) for r in rows] == [("4040", req)]
 
 
 def test_fused_reports_arrow_matches_fused(spark):
@@ -310,7 +329,11 @@ def test_two_phase_rank_equals_single_window_semantics(spark):
                 int(r.cnt), int(r.bytes), int(r.rn), rnb[r.key0],
                 int(g.cnt.sum()), int(g.bytes.sum()), len(g),
             )
-    kept_ref = {k for k, v in ref.items() if v[2] <= K or (k[0] == 3 and v[3] <= K)}
+    # the hourly dim (8) is a full report: every key survives both cuts
+    kept_ref = {
+        k for k, v in ref.items()
+        if v[2] <= K or (k[0] == 3 and v[3] <= K) or k[0] == 8
+    }
 
     got_keys = set()
     for _, r in got.iterrows():
@@ -353,3 +376,31 @@ def test_cli_any_digit_status_flag(tmp_path):
     # the C-semantics run counts 1 valid line, the Nim-semantics run 2
     assert "10.0.0.2" not in strict.stdout
     assert "10.0.0.2" in loose.stdout and "2000" in loose.stdout
+
+
+def test_cli_stdin_matches_path(tmp_path):
+    """`-` spools stdin byte-exactly: a log with a non-UTF-8 byte piped in
+    prints the same report as the same file passed by path, and the spool
+    file is removed at exit."""
+    import os
+    import subprocess
+    import sys
+
+    lines = [
+        b'10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /\xff HTTP/1.1" 404 10 "-" "u" "-"',
+        b'10.0.0.2 - - [10/Oct/2000:13:55:37 +0000] "GET /b HTTP/1.1" 200 20 "-" "u" "-"',
+    ]
+    log = tmp_path / "ff.log"
+    log.write_bytes(b"\n".join(lines) + b"\n")
+    base = [sys.executable, "-m", "nginx_log_spark.cli",
+            "--no-color", "--no-echo", "--master", "local[2]"]
+    by_path = subprocess.run(base + [str(log)], capture_output=True, timeout=300)
+    assert by_path.returncode == 0, by_path.stderr[-1500:]
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    piped = subprocess.run(base + ["-"], input=log.read_bytes(), capture_output=True,
+                           timeout=300, env=dict(os.environ, TMPDIR=str(spool)))
+    assert piped.returncode == 0, piped.stderr[-1500:]
+    assert piped.stdout == by_path.stdout
+    assert b"10.0.0.1" in piped.stdout
+    assert not list(spool.glob("*.log"))

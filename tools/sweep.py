@@ -80,7 +80,7 @@ def main() -> int:
 
     from nginx_log_spark.session import get_spark
 
-    spark = get_spark(app="nls-sweep", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app="nls-sweep", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
