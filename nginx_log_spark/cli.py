@@ -54,26 +54,36 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _report(args: argparse.Namespace, path: str) -> int:
-    from nginx_log_spark.parse import parse_lines, parse_sequences, read_log_lines
+    from nginx_log_spark.parse import parse_lines, parse_sequences, widen_lines
     from nginx_log_spark.reports.render import render_full_report
     from nginx_log_spark.session import get_spark
 
     spark = get_spark(app="nginx_log_spark-cli", master=args.master)
     s3 = not args.any_digit_status
+    # pos numbers the rows in scan order (a file's own order), taken before
+    # widen_lines' round-robin repartition of a narrow scan (one small
+    # file, one .gz) shuffles them, so the echo can follow the input
+    pos = F.monotonically_increasing_id().alias("pos")
     if path.endswith(".parquet") or _is_parquet_dir(path):
-        parsed = parse_sequences(spark.read.parquet(path), status_3digit=s3)
+        parsed = parse_sequences(spark.read.parquet(path).select("*", pos), status_3digit=s3)
+        echo_col = "doc_id"
     else:
-        # read_log_lines handles rotated .gz/.bz2 logs and restores parse
-        # parallelism when a non-splittable codec caps the scan width
-        parsed = parse_lines(read_log_lines(spark, path), status_3digit=s3)
+        # widen_lines restores parse parallelism when the scan is narrow:
+        # a small file, or a non-splittable codec such as a rotated .gz
+        lines = spark.read.text(path).select(F.col("value").alias("line"), pos)
+        parsed = parse_lines(widen_lines(lines), status_3digit=s3)
+        echo_col = "line"
 
-    # stderr echo of rejected lines, c/main.c:480-483 (doc_id for token input).
-    # toLocalIterator streams one partition at a time — bounded driver memory
-    # even when most of a huge input is rejected (the reference streams too).
+    # stderr echo of rejected lines in input order, c/main.c:480-483
+    # (doc_id for token input). The rejects are cached so the sort's
+    # sampling pass and its shuffle share one parse; toLocalIterator
+    # streams one sorted partition at a time, so driver memory stays
+    # bounded even when most of a huge input is rejected.
     if not args.no_echo:
-        echo_col = "line" if "line" in parsed.columns else "doc_id"
-        for r in parsed.filter(~F.col("valid")).select(echo_col).toLocalIterator():
+        rejects = parsed.filter(~F.col("valid")).select(echo_col, "pos").persist()
+        for r in rejects.orderBy("pos").toLocalIterator():
             print(r[0], file=sys.stderr)
+        rejects.unpersist()
 
     valid = parsed.filter(F.col("valid"))
     sys.stdout.write(

@@ -13,6 +13,7 @@ from nginx_log_spark.parse.parser import (  # noqa: F401
 from nginx_log_spark.parse.text_source import (  # noqa: F401
     codec_splittable,
     read_log_lines,
+    widen_lines,
 )
 
 # the engine parser: the Arrow-native two-tier parser (RE2 strict path +

@@ -53,15 +53,23 @@ def read_log_lines(
 ) -> DataFrame:
     """Read raw log text (plain, .gz, .bz2, or a glob/list mixing them)
     as a one-column ``line`` DataFrame, restoring parse-stage parallelism
-    when non-splittable codecs cap the scan below ``min_partitions``.
+    when non-splittable codecs cap the scan below ``min_partitions``
+    (see ``widen_lines``).
+    """
+    return widen_lines(spark.read.text(path).withColumnRenamed("value", "line"), min_partitions)
+
+
+def widen_lines(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+    """Repartition a line scan that is narrower than ``min_partitions``.
 
     min_partitions defaults to ``spark.sparkContext.defaultParallelism``
     (the core count) — pass an explicit value to tune, or 0/negative to
-    disable the repartition entirely (pure pass-through scan).
+    disable the repartition entirely (pure pass-through scan). The
+    repartition is round-robin, so it loses the scan order: number the
+    lines before calling this if the order matters.
     """
-    df = spark.read.text(path).withColumnRenamed("value", "line")
     if min_partitions is None:
-        min_partitions = spark.sparkContext.defaultParallelism
+        min_partitions = df.sparkSession.sparkContext.defaultParallelism
     if min_partitions and min_partitions > 0:
         got = df.rdd.getNumPartitions()
         if got < min_partitions:

@@ -147,7 +147,8 @@ def salted_count(
     Note: for plain counts Spark's partial aggregation already does
     map-side combine, so the salt only pays off when the DISTINCT count per
     (key) per partition is huge or the aggregate is distinct-based; it's
-    provided for those shapes and benchmarked in bench.py.
+    provided for those shapes and graded by the ``log_salted_topk`` query
+    (driver_queries.py) against its unsalted SQL form.
     """
     salt: Column = (F.rand(seed=42) * salt_buckets).cast("int")
     partial = (

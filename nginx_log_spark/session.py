@@ -23,8 +23,7 @@ def get_spark(
     Defaults fit the machine: ``local[N]`` over the cores this process may
     run on, and a driver heap of a quarter of physical memory. The
     environment overrides them (``SPARK_GRAFT_MASTER``,
-    ``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM``), so bench.py can run
-    the identical job at two parallelism levels.
+    ``SPARK_GRAFT_CPUS``, ``SPARK_GRAFT_DRIVER_MEM``).
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     mem_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20  # MemTotal
@@ -72,60 +71,4 @@ def get_spark(
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_session(spark)
     return spark
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One tiny untimed job per fresh session: steady-state protocol.
-
-    A local JVM's FIRST job pays executor/task-scheduler spin-up, Janino
-    codegen-compiler init, exchange + broadcast machinery and the parquet
-    reader stack — measured ~2.5-4 s charged to whichever query happens
-    to run first (BENCH.md's steady-state protocol already warms the
-    parse and enrich groups explicitly; this covers every other entry
-    point, e.g. the ops group and the correctness sweep children). The
-    job below touches exactly those paths on a few thousand in-memory
-    rows + a 2-row parquet round-trip (~1 s, amortizes to nothing at any
-    real scale). Opt out with SPARK_GRAFT_SESSION_WARMUP=0.
-    """
-    if os.environ.get("SPARK_GRAFT_SESSION_WARMUP", "1") == "0":
-        return
-    if spark.conf.get("spark.nginx_log_spark.warmed", None) == "1":
-        return
-    try:
-        import tempfile
-
-        from pyspark.sql import Window, functions as F
-
-        df = spark.range(0, 4096, 1, 8).select(
-            (F.col("id") % 97).alias("k"), F.col("id").cast("double").alias("v")
-        )
-        small = spark.range(0, 97).select(F.col("id").alias("k"))
-        w = Window.partitionBy("k").orderBy("v")
-        (
-            df.join(F.broadcast(small), "k")
-            .withColumn("r", F.row_number().over(w))
-            .groupBy("k")
-            .agg(F.sum("v"), F.count(F.lit(1)))
-            .orderBy("k")
-            .limit(5)
-            .collect()
-        )
-        with tempfile.TemporaryDirectory(prefix="nls_warm_") as d:
-            p = f"{d}/warm.parquet"
-            spark.range(0, 2).selectExpr(
-                "id", "cast(id as string) s", "cast(id as decimal(18,2)) d"
-            ).write.mode("overwrite").parquet(p)
-            spark.read.parquet(p).groupBy("s").agg(F.sum("d")).collect()
-
-        # fork the python worker pool (mapInArrow/pandas paths would
-        # otherwise pay it on their first timed use)
-        def _identity(batches):
-            yield from batches
-
-        spark.range(0, 64, 1, 4).mapInArrow(_identity, "id long").count()
-    except Exception:  # never let the warm-up break a session
-        pass
-    finally:
-        spark.conf.set("spark.nginx_log_spark.warmed", "1")

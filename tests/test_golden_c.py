@@ -388,3 +388,71 @@ def test_cpp_binary_anydigit_semantics(cpp_binary, tmp_path, spark):
     # and the C-semantics default REJECTS the non-3-digit majority
     c_mode_valid = parse_lines_arrow(df).filter(F.col("valid")).count()
     assert c_mode_valid < ours_valid.count()
+
+
+# ---------------------------------------------------------------------------
+# golden fields: the engine's fused rows vs rows derived from oracle.py
+# ---------------------------------------------------------------------------
+
+def _oracle_fused_rows(lines: list[str], k: int) -> list[dict]:
+    """The fused report rows that render_from_fused reads, derived without
+    Spark: parse with oracle.py, count in pandas, rank by (cnt desc, key
+    asc) and (bytes desc, key asc), with section totals and distinct
+    counts per table and per bad-code section."""
+    import pandas as pd
+
+    from nginx_log_spark.parse import oracle
+    from nginx_log_spark.reports.reports import REPORT_KEYS
+
+    df = pd.DataFrame([r for r in map(oracle.parse_line, lines) if r is not None])
+
+    def ranked(sub: pd.DataFrame, col: str, dim: str, key=None) -> list[dict]:
+        g = sub.groupby(col).body_bytes_sent.agg(["size", "sum"]).reset_index()
+        g.columns = ["k", "cnt", "bytes"]
+        g = g.sort_values(["bytes", "k"], ascending=[False, True])
+        g["rn_bytes"] = range(1, len(g) + 1)
+        g = g.sort_values(["cnt", "k"], ascending=[False, True])
+        g["rn"] = range(1, len(g) + 1)
+        section = {"section_total": int(g.cnt.sum()), "section_bytes": int(g.bytes.sum()),
+                   "section_keys": len(g)}
+        return [
+            {"dim": dim, "key": r.k if key is None else key, "key2": None if key is None else r.k,
+             "cnt": int(r.cnt), "bytes": int(r.bytes), "rn": r.rn, "rn_bytes": r.rn_bytes,
+             **section}
+            for r in g.itertuples() if r.rn <= k or r.rn_bytes <= k
+        ]
+
+    rows = [row for dim, col in REPORT_KEYS.items() for row in ranked(df, col, dim)]
+    for status, sub in df[df.status != "200"].groupby("status"):
+        rows += ranked(sub, "request", "bad_code", key=status)
+    return rows
+
+
+def test_fused_rows_render_like_golden_fields(spark):
+    """Byte parity without the C binary: the report rendered from the
+    engine's fused rows (both front ends: fused_reports over parse_lines,
+    fused_reports_arrow over tokens) equals the report rendered from rows
+    derived independently from the golden fields. k=5 cuts through ties
+    (equal counts at ranks 5 and 6) in most tables, so the key-ascending
+    tie order is part of what is compared."""
+    from pyspark.sql import functions as F
+
+    from nginx_log_spark.parse import parse_lines
+    from nginx_log_spark.parse.parser import encode_lines
+    from nginx_log_spark.reports.reports import fused_reports, fused_reports_arrow
+    from nginx_log_spark.reports.render import render_from_fused
+
+    k = 5
+    lines = _fixture_lines()
+    for dim in ("top_ips", "top_requests", "top_times"):
+        cnt = {r["rn"]: r["cnt"] for r in _oracle_fused_rows(lines, k + 1) if r["dim"] == dim}
+        assert cnt[k] == cnt[k + 1], dim  # a tie straddles the cut
+    want = render_from_fused(_oracle_fused_rows(lines, k), k, WIDTH)
+
+    df = spark.createDataFrame([(f"d{i}", ln, "s") for i, ln in enumerate(lines)],
+                               "doc_id string, line string, source string").repartition(4)
+    jvm = fused_reports(parse_lines(df).filter(F.col("valid")), k).collect()
+    seq = df.select("doc_id", encode_lines(F.col("line")).alias("tokens"), "source")
+    arrow = fused_reports_arrow(seq.withColumn("n_tok", F.size("tokens")), k).collect()
+    assert render_from_fused(jvm, k, WIDTH) == want
+    assert render_from_fused(arrow, k, WIDTH) == want

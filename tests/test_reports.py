@@ -381,26 +381,34 @@ def test_cli_any_digit_status_flag(tmp_path):
 def test_cli_stdin_matches_path(tmp_path):
     """`-` spools stdin byte-exactly: a log with a non-UTF-8 byte piped in
     prints the same report as the same file passed by path, and the spool
-    file is removed at exit."""
+    file is removed at exit. The stderr echo lists the rejected lines in
+    file order (c/main.c:480-483), although a file this small scans as one
+    partition that is then repartitioned round-robin for the parse."""
     import os
     import subprocess
     import sys
 
     lines = [
         b'10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /\xff HTTP/1.1" 404 10 "-" "u" "-"',
-        b'10.0.0.2 - - [10/Oct/2000:13:55:37 +0000] "GET /b HTTP/1.1" 200 20 "-" "u" "-"',
+    ] + [
+        b"malformed %03d" % i if i % 3 == 0 else
+        b'10.0.0.%d - - [10/Oct/2000:13:55:%02d +0000] "GET /b HTTP/1.1" 200 20 "-" "u" "-"'
+        % (i % 5 + 2, i)
+        for i in range(1, 40)
     ]
     log = tmp_path / "ff.log"
     log.write_bytes(b"\n".join(lines) + b"\n")
-    base = [sys.executable, "-m", "nginx_log_spark.cli",
-            "--no-color", "--no-echo", "--master", "local[2]"]
+    base = [sys.executable, "-m", "nginx_log_spark.cli", "--no-color", "--master", "local[2]"]
     by_path = subprocess.run(base + [str(log)], capture_output=True, timeout=300)
     assert by_path.returncode == 0, by_path.stderr[-1500:]
+    echoed = [ln for ln in by_path.stderr.split(b"\n") if ln.startswith(b"malformed")]
+    assert echoed == [ln for ln in lines if ln.startswith(b"malformed")]
     spool = tmp_path / "spool"
     spool.mkdir()
-    piped = subprocess.run(base + ["-"], input=log.read_bytes(), capture_output=True,
+    piped = subprocess.run(base + ["--no-echo", "-"], input=log.read_bytes(), capture_output=True,
                            timeout=300, env=dict(os.environ, TMPDIR=str(spool)))
     assert piped.returncode == 0, piped.stderr[-1500:]
+    assert b"malformed" not in piped.stderr
     assert piped.stdout == by_path.stdout
     assert b"10.0.0.1" in piped.stdout
     assert not list(spool.glob("*.log"))
