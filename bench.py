@@ -128,6 +128,7 @@ def _group_queries(spark, group: str) -> dict:
             prefix_jaccard_pairs,
             remove_duplicate_spans,
         )
+        from nginx_log_spark.functions.dedup import with_shingles
 
         docs = lambda: spark.read.parquet(f"{SF_DIR}/documents.parquet")
 
@@ -140,7 +141,21 @@ def _group_queries(spark, group: str) -> dict:
             # in every doc: the hot-key case for the frequency join
             boiler = " the quick brown fox jumps over the lazy dog once more"
             skewed = docs().withColumn("text", F.concat(F.col("text"), F.lit(boiler)))
-            prefix_jaccard_pairs(skewed, shingle_k=5, threshold=0.7, broadcast_verify=True).count()
+            prefix_jaccard_pairs(skewed, shingle_k=5, threshold=0.7).count()
+
+        # a pseudo-random tail of 260 letters per distinct text (exact
+        # duplicates keep theirs, so they stay pairs) lifts the vocabulary
+        # above 2^20 shingles: the join's relational path
+        open_vocab = lambda: docs().withColumn("text", F.concat_ws(" ", "text", F.expr(
+            "concat_ws('', transform(sequence(1, 260), i -> substring("
+            "'abcdefghijklmnopqrstuvwxyz', cast(pmod(xxhash64(text, i), 26) as int) + 1, 1)))"
+        )))
+        # checkpointed first: otherwise the explode's inferred size(_sh) > 0
+        # filter re-derives the text once per shingle position (~6 min on 4 cores)
+        n_vocab = with_shingles(open_vocab(), "text", 5).localCheckpoint().select(
+            F.explode("_sh")).distinct().count()
+        print(f"[bench] docs_prefix_jaccard_openvocab vocabulary: {n_vocab} shingles",
+              file=sys.stderr, flush=True)
 
         def nb():
             d = docs()
@@ -155,9 +170,12 @@ def _group_queries(spark, group: str) -> dict:
             "docs_minhash_lsh_xxh": lambda: minhash("xxhash64"),
             "docs_minhash_lsh_md5_parity": lambda: minhash("md5_sliced"),
             "docs_prefix_jaccard_t07": lambda: prefix_jaccard_pairs(
-                docs(), shingle_k=5, threshold=0.7, broadcast_verify=True
+                docs(), shingle_k=5, threshold=0.7
             ).count(),
             "docs_prefix_jaccard_skew": prefix_jaccard_skew,
+            "docs_prefix_jaccard_openvocab": lambda: prefix_jaccard_pairs(
+                open_vocab(), shingle_k=5, threshold=0.7
+            ).count(),
             "emb_cosine_tfidf_composite": lambda: Q.emb_cosine_topk(spark, SF_DIR).collect(),
             "docs_dsir_select": lambda: dsir_select(
                 docs(), F.col("source") == "src0", k=100

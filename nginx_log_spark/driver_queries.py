@@ -35,13 +35,10 @@ from nginx_log_spark.functions import (
     dedup_keep,
     embedding_neardup_pairs,
     exact_dedup,
-    ivf_ann_topk,
     lang_id_col,
     lsh_ann_topk,
-    lsh_ann_topk_multiprobe,
     lsh_candidate_pairs,
     minhash_signatures,
-    ngram_jaccard_pairs,
     quality_columns,
     quality_route,
     simhash16,
@@ -154,10 +151,6 @@ def _report(spark, sf, name: str) -> DataFrame:
 def log_top_ips(spark, sf):
     """来访IP统计 (c/main.c:499): top-100 IPs by hits + pct."""
     return _report(spark, sf, "top_ips")
-
-
-def log_top_requests(spark, sf):
-    return _report(spark, sf, "top_requests")
 
 
 # --- registry consolidation (round 3) ------------------------------------
@@ -980,13 +973,6 @@ _TOKCOUNT_O = r"""SELECT doc_id,
         FROM documents"""
 
 
-def docs_token_count(spark, sf):
-    cols = token_count_cols(F.col("text"))
-    return _docs(spark, sf).select(
-        "doc_id", cols["n_ws_tokens"].alias("n_ws_tokens"), cols["n_bpe_tokens"].alias("n_bpe_tokens")
-    )
-
-
 _DUCK_STOPS = "['the','a','an','and','or','of','to','in','is','it','that','for','on','with','as','this','was','are','be','at']"
 
 _QUALITY_ORACLE = rf"""
@@ -1011,18 +997,6 @@ FROM f
 """
 
 
-def docs_quality(spark, sf):
-    q = quality_columns(F.col("text"))
-    return _docs(spark, sf).select(
-        "doc_id",
-        q["n_chars"].alias("n_chars"),
-        q["n_words"].alias("n_words"),
-        q["punct_ratio"].alias("punct_ratio"),
-        q["stopword_ratio"].alias("stopword_ratio"),
-        q["quality_score"].alias("quality_score"),
-    )
-
-
 _LANG_ORACLE = """
 SELECT doc_id,
   CASE
@@ -1034,12 +1008,6 @@ SELECT doc_id,
     ELSE 'und' END AS lang_pred
 FROM documents
 """
-
-
-def docs_langid(spark, sf):
-    return _docs(spark, sf).select(
-        "doc_id", lang_id_col(F.col("text")).alias("lang_pred")
-    )
 
 
 # dataset card: per-(source, language) accounting a curation pipeline
@@ -1166,14 +1134,6 @@ def docs_quality_route(spark, sf):
 _FP_O = f"SELECT doc_id, md5({_DUCK_NORM}) AS fp FROM documents"
 
 
-def docs_fingerprint(spark, sf):
-    from nginx_log_spark.functions import doc_fingerprint
-
-    return _docs(spark, sf).select(
-        "doc_id", doc_fingerprint(F.col("text")).alias("fp")
-    )
-
-
 def _duck_minhash_cols(n_hashes: int = 8, k: int = 5) -> str:
     """Sliced-md5 minhash (dedup.minhash_signatures 'md5_sliced'): hash i
     is the i%4-th 8-hex-char slice of md5(shingle || '#g' || i//4), min
@@ -1239,13 +1199,11 @@ def docs_ngram_jaccard(spark, sf):
     ~30% of ALL doc pairs — a threshold inside it makes the RESULT itself
     quadratic, which no join strategy can outrun), yet keeps the output
     non-vacuous: organic [0.3, 0.4) pairs plus the planted >= 0.9 clones.
-    broadcast_verify fits this fixture's doc count; the length and
-    positional filters (PPJoin) run regardless."""
+    The fixture's vocabulary is small, so the join takes its in-row
+    ranking and bitset verify path."""
     from nginx_log_spark.functions import prefix_jaccard_pairs
 
-    return prefix_jaccard_pairs(
-        _docs(spark, sf), shingle_k=5, threshold=0.3, broadcast_verify=True
-    )
+    return prefix_jaccard_pairs(_docs(spark, sf), shingle_k=5, threshold=0.3)
 
 
 _PAIR_SCORES_O = f"""
@@ -1294,22 +1252,6 @@ pairs AS (
 SELECT d.doc_id, d.source FROM documents d
 WHERE NOT EXISTS (SELECT 1 FROM pairs p WHERE p.id_b = d.doc_id)
 """
-
-
-def docs_dedup_keep(spark, sf):
-    """End-to-end dedup retention: verified near-dup pairs (jaccard >= 0.7)
-    -> greedy min-id keep via one left-anti join (functions/dedup.dedup_keep).
-    The pairs come from the prefix-filtered all-pairs similarity join
-    (functions/dedup.prefix_jaccard_pairs, Bayardo 2007) — EXACTLY the
-    same pair set as the exhaustive shingle self-join the oracle replays,
-    without its quadratic join volume."""
-    from nginx_log_spark.functions import prefix_jaccard_pairs
-
-    docs = _docs(spark, sf)
-    pairs = prefix_jaccard_pairs(
-        docs, shingle_k=5, threshold=0.7, broadcast_verify=True
-    )
-    return dedup_keep(docs, pairs).select("doc_id", "source")
 
 
 _SIMHASH_CTE = rf"""
@@ -1511,9 +1453,7 @@ def docs_dedup_retain(spark, sf):
     )
 
     docs = _docs(spark, sf).persist()
-    pairs = prefix_jaccard_pairs(
-        docs, shingle_k=5, threshold=0.7, broadcast_verify=True
-    ).persist()
+    pairs = prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7).persist()
     ng = dedup_keep(docs, pairs).select(
         F.lit("ngram_verified").alias("method"), "doc_id", "source"
     )
@@ -1749,15 +1689,6 @@ FROM b, q, qb
 WHERE bit_count(xor(bucket, qbucket)) <= 1
 ORDER BY cosine DESC, vec_id LIMIT 10
 """
-
-
-def emb_lsh_ann_multiprobe(spark, sf):
-    """Multi-probe LSH ANN (similarity.lsh_ann_topk_multiprobe): the query
-    bucket plus all 1-bit-flip neighbors — the recall/cost knob; the probe
-    set stays an explicit IN-list so a materialized index still prunes."""
-    embs = _embs(spark, sf)
-    q = embs.filter(F.col("vec_id") == 0).select("embedding").first()[0]
-    return lsh_ann_topk_multiprobe(embs, list(q), k=10, n_planes=6, probe_bits=1)
 
 
 _LSH_ANN_BOTH_O = f"""
@@ -3284,13 +3215,6 @@ SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
             THEN round((n_grams - n_distinct) / n_grams, 6)
             ELSE 0.0 END AS dup_gram_frac
 FROM g"""
-
-
-def docs_repetition(spark, sf):
-    """Gopher-style duplicate-8-gram fraction per doc (quality filter)."""
-    from nginx_log_spark.functions import repetition_stats
-
-    return repetition_stats(_docs(spark, sf))
 
 
 # Two span definitions graded side by side: sentence mode ('\. ' split,

@@ -598,109 +598,99 @@ def ngram_jaccard_pairs(
     )
 
 
-def _rank_bcast_prefix(
-    spark,
-    sh: DataFrame,
-    freq: DataFrame,
-    id_col: str,
-    threshold: float,
-    emit_masks: bool = False,
+# prefix_jaccard_pairs picks its path by the corpus vocabulary (distinct
+# shingles). Measured on the sf0.1 docs (5,000 docs, 1.02M shingle rows,
+# vocabulary 2,041) at t=0.7, 4 cores: in-row ranking + bitset verify
+# 11-16 s; the same prefixes verified by array intersect 18-21 s; the
+# relational path 20-25 s. Up to _INROW_VOCAB_MAX a doc's bitset is at most
+# 128 longs (1 KB) and the broadcast rank dict is small; above it only the
+# relational path is used.
+_INROW_VOCAB_MAX = 1 << 13
+# Relational path: the most frequent shingles are annotated by a broadcast
+# join, so no stop-shingle sends its whole row mass to one shuffle
+# partition. Without it the same inputs took 49-66 s instead of 20-25 s.
+_FREQ_HEAD = 4096
+
+
+def _inrow_prefix_masks(
+    sh: DataFrame, freq: DataFrame, id_col: str, threshold: float
 ) -> DataFrame:
-    """Prefix rows computed IN-ROW against a broadcast vocabulary.
+    """One row per doc: ``_n`` (size of its shingle set), ``_pre`` (its
+    prefix, shingles in the global order) and ``_mask`` (its shingle set
+    as a bitset of int64 words).
 
-    With the (shingle -> document frequency) table small enough to
-    broadcast, each doc can sort its own shingle set by (df, shingle) and
-    emit its prefix directly — one embarrassingly-parallel map over the
-    materialized shingle table, replacing the explode -> frequency-
-    annotation joins -> per-doc rank window of the relational path (and
-    with them every pre-candidate exchange: the Zipf-skewed shingle key
-    never touches a shuffle at all, which is strictly stronger than the
-    head-broadcast hardening it subsumes). Measured 12.4 s -> 3.8 s on
-    the dense sf0.1 bench fixture.
-
-    Exactness: the prefix-filter theorem (see prefix_jaccard_pairs
-    docstring) holds under ANY global total order; Python's (int, str)
-    tuple order is one. The candidate SET may differ from the window
-    path's UTF8-binary order, but the verified result set is provably
-    identical because the verify is exact. Rank consistency for the
-    positional filter holds because every doc ranks under the same
-    Python order. The prefix length uses the identical IEEE-double
-    floor(t*n)+1 as the relational path.
-
-    ``emit_masks``: additionally emit ONE row per doc carrying the doc's
-    shingle set as a dense BITSET (``_s``/``_rk`` null, ``_mask``
-    array<bigint>), bit position = rank of the shingle in the
-    lexicographically sorted vocabulary. The same pass already holds each
-    doc's array and the broadcast vocabulary, so the mask costs one extra
-    O(|doc|) loop and |docs| extra rows — no second scan, no second
-    Python boundary. Consumed by prefix_jaccard_pairs' popcount verify
-    (see ``mask_verify_max``); prefix-row consumers are unaffected (an
-    equi-join on ``_s`` drops null keys, and the callers filter
-    explicitly). Bit assignment is a bijection vocabulary -> [0, |V|)
-    with no hashing anywhere, so unlike the xxhash64 recode there is no
-    collision fallback to even consider.
-    """
+    The global (df asc, shingle asc) order is built once on the driver
+    from the collected frequency table (callers bound it by
+    _INROW_VOCAB_MAX) and broadcast as shingle -> position. The position
+    is both the sort key of the in-row ranking and the shingle's bit: a
+    bijection vocabulary -> [0, |V|), so the popcount verify is exact with
+    no hashing. The prefix length is the same IEEE-double floor(t*n) + 1
+    the relational path computes."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_type
 
-    vocab = {r[0]: r[1] for r in freq.collect()}
-    bc = spark.sparkContext.broadcast(vocab)
-    id_ddl = dict(sh.dtypes)[id_col]
-    id_pa = to_arrow_type(sh.schema[id_col].dataType)
+    order = sorted(freq.collect(), key=lambda r: (r["_df"], r["_s"]))
+    bc = sh.sparkSession.sparkContext.broadcast(
+        {r["_s"]: i for i, r in enumerate(order)}
+    )
+    n_words = (len(order) + 63) >> 6
     thr = float(threshold)
 
     def op(batches):
-        v = bc.value
-        if emit_masks:
-            # dense bit index: position of each shingle in the sorted
-            # vocabulary (deterministic; rebuilt once per task from the
-            # same broadcast dict the ranking uses)
-            pos = {s: i for i, s in enumerate(sorted(v))}
-            n_words = (len(pos) + 63) >> 6
+        pos = bc.value
         for b in batches:
-            ids = b.column(b.schema.get_field_index(id_col)).to_pylist()
-            shl = b.column(b.schema.get_field_index("_sh")).to_pylist()
-            out_id, out_n, out_s, out_rk = [], [], [], []
-            out_mask: list | None = [] if emit_masks else None
-            for i, arr in zip(ids, shl):
+            out_n, out_pre, out_mask = [], [], []
+            for arr in b.column("_sh").to_pylist():
                 n = len(arr)
-                arr.sort(key=lambda s: (v[s], s))
-                for rk in range(min(n - int(thr * n) + 1, n)):
-                    out_id.append(i)
-                    out_n.append(n)
-                    out_s.append(arr[rk])
-                    out_rk.append(rk + 1)
-                    if emit_masks:
-                        out_mask.append(None)
-                if emit_masks:
-                    m = [0] * n_words
-                    for s in arr:
-                        j = pos[s]
-                        m[j >> 6] |= 1 << (j & 63)
-                    out_id.append(i)
-                    out_n.append(n)
-                    out_s.append(None)
-                    out_rk.append(None)
-                    # int64 wrap for bit 63 (Spark longs are signed)
-                    out_mask.append(
-                        [w - (1 << 64) if w >= (1 << 63) else w for w in m]
-                    )
-            arrays = [
-                pa.array(out_id, id_pa),
-                pa.array(out_n, pa.int32()),
-                pa.array(out_s, pa.string()),
-                pa.array(out_rk, pa.int32()),
-            ]
-            names = [id_col, "_n", "_s", "_rk"]
-            if emit_masks:
-                arrays.append(pa.array(out_mask, pa.list_(pa.int64())))
-                names.append("_mask")
-            yield pa.RecordBatch.from_arrays(arrays, names)
+                arr.sort(key=pos.__getitem__)
+                m = [0] * n_words
+                for s in arr:
+                    j = pos[s]
+                    m[j >> 6] |= 1 << (j & 63)
+                out_n.append(n)
+                out_pre.append(arr[: min(n - int(thr * n) + 1, n)])
+                # int64 wrap for bit 63 (Spark longs are signed)
+                out_mask.append([w - (1 << 64) if w >= (1 << 63) else w for w in m])
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b.column(id_col),
+                    pa.array(out_n, pa.int32()),
+                    pa.array(out_pre, pa.list_(pa.string())),
+                    pa.array(out_mask, pa.list_(pa.int64())),
+                ],
+                [id_col, "_n", "_pre", "_mask"],
+            )
 
-    schema = f"{id_col} {id_ddl}, _n int, _s string, _rk int"
-    if emit_masks:
-        schema += ", _mask array<bigint>"
-    return sh.mapInArrow(op, schema)
+    id_ddl = dict(sh.dtypes)[id_col]
+    return sh.mapInArrow(
+        op, f"{id_col} {id_ddl}, _n int, _pre array<string>, _mask array<bigint>"
+    )
+
+
+def _relational_prefix(
+    ex: DataFrame, freq: DataFrame, id_col: str, threshold: float
+) -> DataFrame:
+    """Prefix rows (id, _n, _s, _rk) by annotating every exploded shingle
+    with its df and ranking each doc's shingles in a window. The
+    _FREQ_HEAD most frequent shingles (df desc, shingle asc; a bounded
+    collect) are annotated map-side through a broadcast; only the tail,
+    whose every key has at most the head's smallest df, takes a shuffle
+    join."""
+    from pyspark.sql import Window
+
+    head_rows = freq.orderBy(F.desc("_df"), F.asc("_s")).limit(_FREQ_HEAD).collect()
+    head = ex.sparkSession.createDataFrame(
+        [(r["_s"], r["_df"]) for r in head_rows], "_s string, _df long"
+    )
+    hot = ex.join(F.broadcast(head), "_s")
+    tail_freq = freq.join(F.broadcast(head.select("_s")), "_s", "left_anti")
+    cold = ex.join(F.broadcast(head.select("_s")), "_s", "left_anti").join(tail_freq, "_s")
+    ranked = hot.unionByName(cold).withColumn(
+        "_rk",
+        F.row_number().over(Window.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("_s"))),
+    )
+    return ranked.filter(
+        F.col("_rk") <= F.col("_n") - F.floor(F.lit(threshold) * F.col("_n")) + 1
+    ).select(id_col, "_n", "_s", "_rk")
 
 
 def prefix_jaccard_pairs(
@@ -709,10 +699,6 @@ def prefix_jaccard_pairs(
     id_col: str = "doc_id",
     shingle_k: int = 5,
     threshold: float = 0.7,
-    broadcast_verify: bool = False,
-    freq_head_bcast: int | None = 4096,
-    rank_bcast_max: int | None = 1 << 20,
-    mask_verify_max: int | None = 1 << 13,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs at >= threshold via PREFIX FILTERING
     (the all-pairs similarity join of Bayardo et al., WWW 2007 / the
@@ -731,10 +717,7 @@ def prefix_jaccard_pairs(
     are too short. We order by (document frequency asc, shingle asc), so
     prefixes hold each doc's RAREST shingles and stop-shingle buckets
     ("the ", " and ") never form candidates unless they are genuinely
-    rare. Candidates are then verified with the exact array_intersect
-    Jaccard, identical expression to ngram_jaccard_pairs.
-
-    The prefix length uses floor instead of ceil (one extra indexed
+    rare. The prefix length uses floor instead of ceil (one extra indexed
     shingle when t*|d| is fractional): float rounding in t*|d| can only
     ever LENGTHEN the prefix, never shorten it below the exactness bound.
 
@@ -752,166 +735,82 @@ def prefix_jaccard_pairs(
       therefore only exceed cm past rank max_ra in A and max_rb in B:
       |A∩B| <= cm + min(|A| - max_ra, |B| - max_rb). Pairs whose bound
       cannot reach the overlap t/(1+t)*(|A|+|B|) required by J >= t are
-      dropped before any array is shipped; the comparison keeps a 1e-9
+      dropped before any set is shipped; the comparison keeps a 1e-9
       slack toward KEEPING, so float rounding can only admit extra
       candidates for the exact verify to reject.
 
-    ``broadcast_verify``: hint the doc->shingle-array side of the verify
-    join for broadcast. The candidate columns (two ids) are tiny; the
-    array side is |docs|-sized. When the doc set fits in executor memory
-    (single-tenant runs, per-bucket/per-partition invocations), this
-    replaces a |candidates|-bounded shuffle of full shingle arrays with a
-    map-side join — measured 4.4x on the dense bench fixture. Leave False
-    when ``df`` is a full web-scale corpus: there the candidate set is
-    sparse and the pairs-bounded shuffle is the right plan.
+    The shingle table and its (shingle -> df) table are materialized once
+    (localCheckpoint); one count of the latter picks the path:
 
-    ``freq_head_bcast``: the exploded-rows -> frequency annotation join
-    shuffles on the shingle key, which is Zipf-skewed — a stop-shingle
-    ("the ", " and ") present in most docs puts its entire row mass in
-    one shuffle partition, the classic straggler at 100x scale. With
-    ``freq_head_bcast = H`` the H highest-df shingles (deterministic:
-    df desc, shingle asc; driver-bounded collect of <= H tiny rows) are
-    BROADCAST and annotated map-side, and only the tail — where every
-    key's row count is <= the head's minimum df by construction — takes
-    the shuffle join. The _df values are identical either way, so the
-    result is exactly unchanged; set None/0 to restore the single
-    shuffle join (AQE skew-split then handles moderate skew at runtime).
+    - In-row (vocabulary <= _INROW_VOCAB_MAX = 2^13). The vocabulary is
+      collected (bounded by that count), ordered once on the driver and
+      broadcast; each doc ranks its own shingles in one Python pass that
+      also emits its shingle set as a bitset (_inrow_prefix_masks), and
+      the verify is |A∩B| = sum of bit_count(maskA AND maskB). No
+      shuffle of the exploded shingle stream, no window. Measured reason:
+      the whole call is 1.3-1.6x faster than with an array-intersect
+      verify of the same prefixes, and 1.5-1.8x faster than the relational
+      path (sf0.1 docs, 4 cores). Removable when the relational path
+      matches it on small vocabularies.
+    - Relational (larger vocabularies, no driver-side vocabulary). The
+      frequency annotation broadcasts the most frequent shingles
+      (_relational_prefix), a window over doc ids ranks each doc's
+      shingles, and the verify intersects the docs' shingle arrays
+      recoded as xxhash64 longs (2.6x faster on the verify stage than
+      intersecting the strings, measured on a 32-core box). The recode is exact: it is used only after an aggregate
+      over the vocabulary shows xxhash64 is injective on it; on a
+      collision the strings are intersected instead. This is the only
+      path for vocabularies too large to broadcast, so it stays as long
+      as such inputs are accepted.
 
-    Cost note: the head/tail split spans FOUR disconnected consumers of
-    the shingled corpus (the head-selection job, the hot probe, the cold
-    probe, the tail re-aggregation) plus the two verify sides — subtrees
-    Catalyst cannot reuse one exchange across. The shingling projection
-    (regex normalize + k-gram transform, the dominant scan cost) and the
-    vocab-sized frequency table are therefore materialized ONCE via
-    localCheckpoint when this mode is on (the mode is already eager by
-    construction — head selection collects at call time), and every
-    downstream pass reads the stored blocks; measured 2.3x on the dense
-    bench fixture vs recomputing. Blocks are MEMORY_AND_DISK and are
-    released by the ContextCleaner when the result frame is dropped.
+    Both paths verify on the UNROUNDED ratio common / (|A| + |B| - common)
+    with int sizes, the same expression as ngram_jaccard_pairs, so the
+    emitted jaccard is bit-identical across paths. The verify joins carry
+    no broadcast hint: adaptive execution broadcasts the per-doc side
+    when it is small.
 
-    ``rank_bcast_max`` (round 6): in freq_head_bcast mode, when the
-    corpus VOCABULARY (distinct shingles — bounded by content diversity,
-    not corpus size; checked with one count on the already-materialized
-    frequency table) is at most this many entries, the per-doc prefix is
-    computed IN-ROW against a broadcast (shingle -> df) dict
-    (_rank_bcast_prefix) instead of the explode -> annotate-join ->
-    rank-window pipeline. The Zipf-skewed shingle key then never touches
-    any shuffle, subsuming the head-broadcast hardening below; the
-    verified result set is provably unchanged (prefix filtering is exact
-    under ANY global order and the verify is exact — candidate sets may
-    differ, results cannot). Default 2^20 entries (~100 MB dict per
-    python worker); above it, or with 0/None, the relational path below
-    runs unchanged — the 100 TB shape for open-vocabulary corpora.
-
-    Verify encoding (round 6): in freq_head_bcast mode the
-    |candidates|-bounded verify intersects xxhash64-recoded LONG arrays
-    instead of the UTF8 shingle strings — measured 2.6x on the verify
-    stage, which dominates dense corpora. This is EXACT, not
-    approximate: the recode is only used after a vocab-sized aggregate
-    proves xxhash64 injective on this corpus's vocabulary (zero
-    collisions -> bijection -> every intersection and array size is
-    identical); on a collision (~|vocab|^2/2^64) the string verify runs
-    instead, so the result set can never differ.
-
-    ``mask_verify_max`` (round 6): on the in-row ranking path, when the
-    vocabulary additionally fits this many entries (default 2^13 ->
-    <= 128 longs = 1 KB of bitset per doc), the verify drops the array
-    intersect entirely: the ranking pass emits each doc's shingle set as
-    a dense BITSET (bit position = rank in the sorted vocabulary — an
-    assigned bijection, no hashing, no collision caveat), and
-    |A∩B| = sum over words of bit_count(maskA AND maskB). ~32 word ops
-    per pair instead of a ~|doc|-element hash-set intersect — measured
-    4x on the verify stage (0.9-1.1 s -> 0.2-0.3 s on the 505k-candidate
-    dense sf0.1 fixture) with byte-identical output (the sizes come from
-    the same |shingle set| the array path measures; the division is the
-    same int/int -> double expression). The gate is a bound on CONTENT
-    DIVERSITY (distinct shingles), not corpus size — above it the
-    xxhash64-recode array verify below runs unchanged, which is the
-    open-vocabulary 100 TB shape. Set 0/None to disable.
-
-    Scale shape: one explode + vocab-sized groupBy for frequencies
-    (head/tail split as above), a per-doc window over uniform id keys
-    for ranks, an equi-join on prefix shingles only (~(1-t) of the
-    original volume, rare-first), and a |candidates|-bounded verify. No
-    all-pairs step anywhere."""
-    from pyspark.sql import Window
-
+    Scale shape: one explode + vocab-sized groupBy for frequencies, an
+    equi-join on prefix shingles only (~(1-t) of the original volume,
+    rare-first), and a |candidates|-bounded verify. No all-pairs step."""
+    # a null text shingles to [null], which joins nothing (as in
+    # ngram_jaccard_pairs) but cannot be ordered against strings in-row
+    docs = df.select(id_col, text_col).filter(F.col(text_col).isNotNull())
     # fan-out guard for tiny single-split corpora (no-op at scale): the
     # shingling below otherwise runs in ONE scan task
-    sh = with_shingles(
-        ensure_parallelism(df.select(id_col, text_col)), text_col, shingle_k
-    ).select(F.col(id_col), F.col("_sh"))
-    if freq_head_bcast:
-        # one shingling pass for the 6 downstream consumers (see docstring
-        # cost note); eager is free — this mode collects the head below
-        sh = sh.localCheckpoint(eager=True)
+    sh = (
+        with_shingles(ensure_parallelism(docs), text_col, shingle_k)
+        .select(F.col(id_col), F.col("_sh"))
+        .localCheckpoint(eager=True)
+    )
     ex = sh.select(id_col, F.size("_sh").alias("_n"), F.explode("_sh").alias("_s"))
-    freq = ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df"))
-    prefix = None
-    masks = None
-    if freq_head_bcast:
-        spark = df.sparkSession
-        # vocab-sized; consumed by head selection AND the tail anti-join
-        freq = freq.localCheckpoint(eager=True)
-        nvocab = freq.count() if rank_bcast_max else None
-        if rank_bcast_max and nvocab <= rank_bcast_max:
-            # vocabulary fits a broadcast: rank in-row, skip the
-            # annotate joins AND the window entirely (see helper)
-            # materialize the prefix ONCE: it feeds both self-join sides,
-            # and unlike the relational path (whose window exchange is
-            # already reused — measured no-gain, see docstring) the
-            # mapInArrow pass would otherwise pay the Python boundary
-            # twice. |prefix| <= ~(1-t)+eps of the shingle rows, and the
-            # blocks follow the same MEMORY_AND_DISK / ContextCleaner
-            # lifecycle as the sh checkpoint above. Measured 4.1 -> 3.5 s
-            # median on the dense sf0.1 fixture.
-            use_masks = bool(mask_verify_max) and nvocab <= mask_verify_max
-            combined = _rank_bcast_prefix(
-                spark, sh, freq, id_col, threshold, emit_masks=use_masks
-            ).localCheckpoint(eager=True)
-            if use_masks:
-                # one checkpointed frame carries both row kinds: the
-                # prefix rows (for the candidate self-join) and one
-                # bitset row per doc (for the popcount verify) — the
-                # split below is a stored-block filter, not a recompute
-                prefix = combined.filter(F.col("_s").isNotNull()).select(
-                    id_col, "_n", "_s", "_rk"
-                )
-                masks = combined.filter(F.col("_s").isNull()).select(
-                    id_col, "_mask", "_n"
-                )
-            else:
-                prefix = combined
-    if prefix is None:
-        if freq_head_bcast:
-            # driver-bounded by construction: <= freq_head_bcast
-            # (shingle, df) rows — the Zipf head is tiny relative to any
-            # corpus vocabulary
-            head_rows = (
-                freq.orderBy(F.desc("_df"), F.asc("_s"))
-                .limit(freq_head_bcast)
-                .collect()
+    freq = ex.groupBy("_s").agg(F.count(F.lit(1)).alias("_df")).localCheckpoint(eager=True)
+    if freq.count() <= _INROW_VOCAB_MAX:
+        # one stored row per doc feeds both self-join sides and the verify
+        rows = _inrow_prefix_masks(sh, freq, id_col, threshold).localCheckpoint(eager=True)
+        prefix = rows.select(
+            id_col, "_n", F.posexplode("_pre").alias("_rk", "_s")
+        ).withColumn("_rk", F.col("_rk") + 1)
+        sets = rows.select(id_col, "_n", F.col("_mask").alias("_v"))
+
+        def overlap(a, b):
+            return F.aggregate(
+                F.zip_with(a, b, lambda x, y: F.bit_count(x.bitwiseAND(y))),
+                F.lit(0),
+                lambda acc, v: acc + v,
             )
-            head = spark.createDataFrame(
-                [(r["_s"], r["_df"]) for r in head_rows], "_s string, _df long"
-            )
-            hot = ex.join(F.broadcast(head), "_s")  # map-side: no hot-key shuffle
-            tail_freq = freq.join(F.broadcast(head.select("_s")), "_s", "left_anti")
-            cold = ex.join(F.broadcast(head.select("_s")), "_s", "left_anti").join(
-                tail_freq, "_s"
-            )
-            annotated = hot.unionByName(cold)
-        else:
-            annotated = ex.join(freq, "_s")
-        ranked = annotated.withColumn(
-            "_rk",
-            F.row_number().over(
-                Window.partitionBy(id_col).orderBy(F.asc("_df"), F.asc("_s"))
-            ),
-        )
-        prefix = ranked.filter(
-            F.col("_rk") <= F.col("_n") - F.floor(F.lit(threshold) * F.col("_n")) + 1
-        ).select(id_col, "_n", "_s", "_rk")
+    else:
+        prefix = _relational_prefix(ex, freq, id_col, threshold)
+        n_coll = freq.agg(
+            (F.count(F.lit(1)) - F.countDistinct(F.xxhash64("_s"))).alias("c")
+        ).first()["c"]
+        v = F.col("_sh")
+        if n_coll == 0:
+            v = F.transform("_sh", lambda s: F.xxhash64(s))
+        sets = sh.select(id_col, F.size("_sh").alias("_n"), v.alias("_v"))
+
+        def overlap(a, b):
+            return F.size(F.array_intersect(a, b))
+
     a = prefix.select(
         F.col(id_col).alias("id_a"), F.col("_n").alias("_na"),
         F.col("_rk").alias("_ra"), "_s",
@@ -943,66 +842,19 @@ def prefix_jaccard_pairs(
         )
         .select("id_a", "id_b")
     )
-    if masks is not None:
-        # popcount verify (see mask_verify_max docstring): exact by the
-        # assigned shingle->bit bijection; _n is the same |shingle set|
-        # F.size measures on the array path, and the division is the
-        # identical int/int -> double expression, so the emitted jaccard
-        # is bit-identical to the array-intersect verify
-        sa = masks.select(
-            F.col(id_col).alias("id_a"), F.col("_mask").alias("_ma"),
-            F.col("_n").alias("_na"),
-        )
-        sb = masks.select(
-            F.col(id_col).alias("id_b"), F.col("_mask").alias("_mb"),
-            F.col("_n").alias("_nb"),
-        )
-        if broadcast_verify:
-            sa, sb = F.broadcast(sa), F.broadcast(sb)
-        joined = cands.join(sa, "id_a").join(sb, "id_b")
-        common = F.aggregate(
-            F.zip_with("_ma", "_mb", lambda x, y: F.bit_count(x.bitwiseAND(y))),
-            F.lit(0),
-            lambda acc, v: acc + v,
-        )
-        raw = common / (F.col("_na") + F.col("_nb") - common)
-        return (
-            joined.filter(raw >= threshold)
-            .select("id_a", "id_b", F.round(raw, 6).alias("jaccard"))
-        )
-    vsh = sh
-    if freq_head_bcast:
-        # Verify-side long recode: array_intersect over ~300-element UTF8
-        # string arrays is the dominant cost of the whole join (measured
-        # 2.6x slower than the identical intersect over longs). Recode
-        # each doc's shingle set as xxhash64 values — EXACT, not
-        # approximate, because we first prove injectivity on this corpus's
-        # vocabulary against the already-materialized frequency table (one
-        # vocab-sized aggregate): zero collisions means the recode is a
-        # bijection on every shingle in play, so all intersection sizes
-        # (and array sizes) are identical to the string computation. On a
-        # collision (probability ~|vocab|^2 / 2^64) we fall back to the
-        # string verify, so the result set can never differ.
-        n_coll = freq.agg(
-            (F.count(F.lit(1)) - F.countDistinct(F.xxhash64("_s"))).alias("c")
-        ).first()["c"]
-        if n_coll == 0:
-            vsh = sh.select(
-                id_col, F.transform("_sh", lambda s: F.xxhash64(s)).alias("_sh")
-            )
-    sa = vsh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
-    sb = vsh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    if broadcast_verify:
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    joined = cands.join(sa, "id_a").join(sb, "id_b")
-    common = F.size(F.array_intersect("_sa", "_sb"))
-    # verify on the UNROUNDED ratio (identical expression to
-    # ngram_jaccard_pairs, so the "provably identical result set" claim
-    # holds exactly, not modulo 6-dp rounding at the threshold boundary);
-    # round(.., 6) only shapes the emitted column
-    raw = common / (F.size("_sa") + F.size("_sb") - common)
+    sa = sets.select(
+        F.col(id_col).alias("id_a"), F.col("_n").alias("_na"), F.col("_v").alias("_va")
+    )
+    sb = sets.select(
+        F.col(id_col).alias("id_b"), F.col("_n").alias("_nb"), F.col("_v").alias("_vb")
+    )
+    common = overlap(F.col("_va"), F.col("_vb"))
+    # verify on the UNROUNDED ratio; round(.., 6) only shapes the output
+    raw = common / (F.col("_na") + F.col("_nb") - common)
     return (
-        joined.filter(raw >= threshold)
+        cands.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(raw >= threshold)
         .select("id_a", "id_b", F.round(raw, 6).alias("jaccard"))
     )
 

@@ -77,9 +77,7 @@ def fan_out_write(
     ``format``: sink datasource — parquet (default), orc, or json; all
     bundled with pyspark and able to carry the tokens array column.
     """
-    tagged = with_status_class(parsed).withColumn(
-        "sink", F.when(F.col("valid"), F.lit("routed")).otherwise(F.lit("rejects"))
-    )
+    tagged = _tag_sinks(parsed)
     part_cols = ["sink", "status_class", "source"] + (extra_partition_cols or [])
     w = tagged.write.mode(mode).partitionBy(*part_cols)
     if dynamic_overwrite:

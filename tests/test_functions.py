@@ -1244,12 +1244,18 @@ def test_connected_components_long_chain_raises_past_bound(spark):
         neardup_components(chain, max_rounds=1)
 
 
-def test_prefix_jaccard_equals_exhaustive(spark):
+def test_prefix_jaccard_equals_exhaustive(spark, open_vocab_docs):
     """prefix_jaccard_pairs must return EXACTLY ngram_jaccard_pairs' result
-    (same pairs, same rounded jaccard) — seeded random corpus with planted
-    near-dup clones, boilerplate-heavy docs (hot shingles), identical
-    twins (J=1), and sub-threshold siblings, at two thresholds including
-    one where t*|d| is integral for some docs (the ceil/floor edge)."""
+    (same pairs, same rounded jaccard) on three fixtures, at three
+    thresholds each including one where t*|d| is integral for some docs
+    (the ceil/floor edge):
+
+    - a seeded random corpus with planted near-dup clones, boilerplate-heavy
+      docs (hot shingles), identical twins (J=1) and sub-threshold siblings;
+    - every doc sharing one boilerplate tail (those shingles have df = n,
+      the maximal skew for the frequency annotation);
+    - an open vocabulary (random letters, > 2^13 distinct shingles), which
+      takes the relational path; the other two take the in-row path."""
     import random
 
     from nginx_log_spark.functions import ngram_jaccard_pairs, prefix_jaccard_pairs
@@ -1265,30 +1271,38 @@ def test_prefix_jaccard_equals_exhaustive(spark):
         rows.append((i, rows[i - 60][1]))
     for i in range(75, 90):  # near-clones: one word appended
         rows.append((i, rows[i - 75][1] + " zulu"))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for t in (0.5, 0.7, 0.9):
-        exact = ngram_jaccard_pairs(df, shingle_k=5, threshold=t).collect()
-        fast = prefix_jaccard_pairs(df, shingle_k=5, threshold=t).collect()
-        want = {(r.id_a, r.id_b): r.jaccard for r in exact}
-        got = {(r.id_a, r.id_b): r.jaccard for r in fast}
-        assert got == want, f"threshold={t}: {len(got)} vs {len(want)} pairs"
-        assert want, f"threshold={t}: vacuous fixture"
+    header = "common boilerplate header shared by every single document here"
+    skew = [(i, f"doc number {i} unique payload u{i}a u{i}b u{i}c " + header)
+            for i in range(40)]
+    skew += [(100 + i, skew[i][1]) for i in range(10)]  # identical clones
+    fixtures = {
+        "clones": spark.createDataFrame(rows, "doc_id long, text string"),
+        "boilerplate": spark.createDataFrame(skew, "doc_id long, text string"),
+        "open_vocab": open_vocab_docs,
+    }
+    for name, df in fixtures.items():
+        for t in (0.5, 0.7, 0.9):
+            exact = ngram_jaccard_pairs(df, shingle_k=5, threshold=t).collect()
+            fast = prefix_jaccard_pairs(df, shingle_k=5, threshold=t).collect()
+            want = {(r.id_a, r.id_b): r.jaccard for r in exact}
+            got = {(r.id_a, r.id_b): r.jaccard for r in fast}
+            assert got == want, f"{name} t={t}: {len(got)} vs {len(want)} pairs"
+            assert want, f"{name} t={t}: vacuous fixture"
 
 
 def test_prefix_jaccard_mask_verify_parity(spark):
-    """Round-6 bitset verify (mask_verify_max): with the vocabulary under
-    the gate, |A∩B| comes from popcount(maskA AND maskB) over bit
-    positions ASSIGNED by the sorted vocabulary — a bijection, no
-    hashing, so no collision caveat at all. The result (pairs AND the
-    rounded jaccard values) must be identical to the array-intersect
-    verify (mask_verify_max=0 forces it), including on a fixture whose
-    vocabulary spans a non-multiple-of-64 bit count and docs that share
-    everything / nothing, and at a threshold whose t*|d| product rounds
-    up across an integer (the filter-boundary hazard pinned by
-    test_prefix_jaccard_filter_boundaries)."""
+    """The in-row path's bitset verify: |A∩B| comes from
+    popcount(maskA AND maskB) over bit positions ASSIGNED by the global
+    shingle order — a bijection, no hashing. The result (pairs AND the
+    rounded jaccard values) must equal ngram_jaccard_pairs' on a fixture
+    whose vocabulary spans a non-multiple-of-64 bit count, with docs that
+    share everything / nothing, a null text (no shingles, no pairs), and
+    at a threshold whose t*|d| product rounds up across an integer (the
+    filter-boundary hazard pinned by test_prefix_jaccard_filter_boundaries).
+    The plan verifies by bit_count and never intersects shingle arrays."""
     import random
 
-    from nginx_log_spark.functions import prefix_jaccard_pairs
+    from nginx_log_spark.functions import ngram_jaccard_pairs, prefix_jaccard_pairs
 
     rng = random.Random(7)
     words = [f"w{i:02d}" for i in range(40)]
@@ -1301,6 +1315,7 @@ def test_prefix_jaccard_mask_verify_parity(spark):
     for i in range(62, 74):  # near-clones: one word appended
         rows.append((i, rows[i - 62][1] + " zz"))
     rows.append((99, "0123456789"))  # disjoint from everything
+    rows.append((98, None))
     # the t=0.56 exact-boundary pair of the filter-boundaries test
     rows.append((200, "abcdefghijklmnopqrstuvwxyz012"))
     rows.append((201, "abcdefghijklmnopqrstuvwxyz012"[:18]))
@@ -1310,32 +1325,22 @@ def test_prefix_jaccard_mask_verify_parity(spark):
                       for r in prefix_jaccard_pairs(
                           df, shingle_k=5, threshold=t
                       ).collect()}
-        array_path = {(r.id_a, r.id_b): r.jaccard
-                      for r in prefix_jaccard_pairs(
-                          df, shingle_k=5, threshold=t, mask_verify_max=0
-                      ).collect()}
-        assert with_masks == array_path, f"threshold={t}"
+        exact = {(r.id_a, r.id_b): r.jaccard
+                 for r in ngram_jaccard_pairs(
+                     df, shingle_k=5, threshold=t
+                 ).collect()}
+        assert with_masks == exact, f"threshold={t}"
         assert with_masks, f"threshold={t}: vacuous fixture"
-        if t == 0.56:  # the exact-boundary pair must survive both paths
+        if t == 0.56:  # the exact-boundary pair must survive
             assert (200, 201) in with_masks, with_masks
-    # plan shape: the default (gated-in) path verifies via bit_count and
-    # never ships the shingle arrays; forcing the gate off restores the
-    # array intersect
     import contextlib
     import io
 
-    def _plan(q):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            q.explain("formatted")
-        return buf.getvalue()
-
-    p_mask = _plan(prefix_jaccard_pairs(df, shingle_k=5, threshold=0.7))
-    p_arr = _plan(
-        prefix_jaccard_pairs(df, shingle_k=5, threshold=0.7, mask_verify_max=0)
-    )
-    assert "bit_count" in p_mask and "array_intersect" not in p_mask
-    assert "array_intersect" in p_arr
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        prefix_jaccard_pairs(df, shingle_k=5, threshold=0.7).explain("formatted")
+    p = buf.getvalue()
+    assert "bit_count" in p and "array_intersect" not in p, p
 
 
 def test_prefix_jaccard_filter_boundaries(spark):
@@ -1347,7 +1352,7 @@ def test_prefix_jaccard_filter_boundaries(spark):
     (0.56 * 25 = 14.000000000000002), so without the epsilon slack the
     length filter would drop this qualifying pair. The positional bound
     also lands exactly on the required overlap (cm=1 + min-suffix 13 =
-    14 = t/(1+t)*39). broadcast_verify must return the identical set."""
+    14 = t/(1+t)*39)."""
     from nginx_log_spark.functions import ngram_jaccard_pairs, prefix_jaccard_pairs
 
     t = 0.56
@@ -1359,39 +1364,9 @@ def test_prefix_jaccard_filter_boundaries(spark):
     exact = {(r.id_a, r.id_b): r.jaccard
              for r in ngram_jaccard_pairs(df, shingle_k=5, threshold=t).collect()}
     assert (0, 1) in exact and abs(exact[(0, 1)] - t) < 1e-9, exact
-    for bcast in (False, True):
-        fast = {(r.id_a, r.id_b): r.jaccard
-                for r in prefix_jaccard_pairs(
-                    df, shingle_k=5, threshold=t, broadcast_verify=bcast
-                ).collect()}
-        assert fast == exact, f"broadcast_verify={bcast}: {fast} vs {exact}"
-
-
-def test_prefix_jaccard_freq_head_parity_under_skew(spark):
-    """Stop-shingle skew hardening (freq_head_bcast): on an adversarial
-    fixture where EVERY doc shares the same boilerplate (those shingles'
-    df = n, maximal skew in the frequency-annotation join), the
-    broadcast-head/tail-shuffle split must return exactly the single
-    shuffle join's pairs — _df values are identical either way — for a
-    head cap smaller than, equal to, and larger than the hot vocabulary."""
-    from nginx_log_spark.functions import prefix_jaccard_pairs
-
-    boiler = "common boilerplate header shared by every single document here"
-    rows = [(i, f"doc number {i} unique payload u{i}a u{i}b u{i}c " + boiler)
-            for i in range(40)]
-    rows += [(100 + i, rows[i][1]) for i in range(10)]  # identical clones
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {(r.id_a, r.id_b): r.jaccard
-            for r in prefix_jaccard_pairs(
-                df, shingle_k=5, threshold=0.7, freq_head_bcast=None
-            ).collect()}
-    assert want, "vacuous fixture"
-    for cap in (4, 64, 100_000):
-        got = {(r.id_a, r.id_b): r.jaccard
-               for r in prefix_jaccard_pairs(
-                   df, shingle_k=5, threshold=0.7, freq_head_bcast=cap
-               ).collect()}
-        assert got == want, f"freq_head_bcast={cap}"
+    fast = {(r.id_a, r.id_b): r.jaccard
+            for r in prefix_jaccard_pairs(df, shingle_k=5, threshold=t).collect()}
+    assert fast == exact, f"{fast} vs {exact}"
 
 
 def test_temperature_resample_flattens_mixture(spark):

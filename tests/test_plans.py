@@ -243,58 +243,45 @@ def test_top_fraction_gate_two_phase_window(spark, docs):
 
 def test_prefix_jaccard_is_equi_join_on_prefix(spark, docs):
     """Candidate generation must be an equi-join (on the prefix-shingle
-    key), never a cartesian/nested-loop product; the per-doc rank window
-    partitions by the uniform doc id."""
+    key), never a cartesian/nested-loop product."""
     from nginx_log_spark.functions import prefix_jaccard_pairs
 
     p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    # bounded verify, not a re-join on shingles: the fixture's vocabulary
-    # is under the mask gate, so the default verifies by popcount of the
-    # per-doc bitset masks; with the gate off it intersects id arrays
-    assert "bit_count" in p and "array_intersect" not in p, p
-    p_arr = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7,
-                                      mask_verify_max=0))
-    assert "array_intersect" in p_arr and "bit_count" not in p_arr, p_arr
 
 
-def test_prefix_jaccard_freq_head_joins_broadcast(spark, docs):
-    """Stop-shingle skew hardening of the RELATIONAL (large-vocabulary)
-    path: with freq_head_bcast on and the in-row rank fast path disabled
-    (rank_bcast_max=0), the Zipf-head frequency annotation must be
-    BROADCAST joins (hot inner + the two anti-join exclusions) so the
-    skewed shingle key never routes its row mass through one shuffle
-    partition; only the bounded-df tail takes a shuffle join."""
+def test_prefix_jaccard_freq_head_joins_broadcast(spark, open_vocab_docs):
+    """The relational path, taken by an open vocabulary (> 2^13 distinct
+    shingles): the Zipf-head frequency annotation is BROADCAST joins (hot
+    inner + the two anti-join exclusions) so the skewed shingle key never
+    routes its row mass through one shuffle partition; each doc's shingles
+    are ranked in a Window; the verify intersects xxhash64-recoded arrays
+    (the recode is injective on this vocabulary) and uses no bitset."""
     from nginx_log_spark.functions import prefix_jaccard_pairs
 
-    p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7,
-                                  freq_head_bcast=64, rank_bcast_max=0))
-    # head annotate + ex anti + freq anti, all hinted broadcast
+    p = plan(prefix_jaccard_pairs(open_vocab_docs, shingle_k=5, threshold=0.7))
     assert p.count("BroadcastHashJoin") >= 3, p
+    assert "Window" in p, p
+    assert "xxhash64" in p and "array_intersect" in p, p
+    assert "bit_count" not in p, p
+    assert "CartesianProduct" not in p
 
 
 def test_prefix_jaccard_rank_bcast_path_no_window(spark, docs):
-    """The round-6 broadcast-vocabulary fast path (default when the
-    vocabulary fits) must compute prefixes in-row: no rank Window and no
-    shuffle of the exploded shingle stream before the candidate join —
-    the skewed shingle key appears only in the prefix equi-join, which
-    holds each doc's RAREST shingles by construction."""
+    """The in-row path, taken by the docs fixture (vocabulary <= 2^13):
+    prefixes are computed in-row against the broadcast shingle order, so
+    there is no rank Window and no shuffle of the exploded shingle stream
+    before the candidate join; the per-doc rows are materialized once
+    (ExistingRDD: they feed both self-join sides and the verify), and the
+    verify is the popcount of the bitsets, never an array intersect."""
     from nginx_log_spark.functions import prefix_jaccard_pairs
 
-    out = prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7)
-    p = plan(out)
+    p = plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7))
     assert "Window" not in p, p
-    # the in-row MapInArrow prefix is materialized once (localCheckpoint,
-    # round 6: it feeds both self-join sides) so the candidate join reads
-    # the stored blocks, same pattern as the LSH banded proxy
     assert "ExistingRDD" in p, p
+    assert "bit_count" in p and "array_intersect" not in p, p
     assert "CartesianProduct" not in p
-    # result identity with the relational path (exactness under any
-    # global prefix order + exact verify)
-    rel = prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7,
-                               rank_bcast_max=0)
-    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, rel.collect()))
 
 
 def test_asof_join_single_window_no_range_join(spark, sf_dir):

@@ -252,21 +252,34 @@ def main() -> None:
     from nginx_log_spark.functions import asof_join, prefix_jaccard_pairs
 
     sections.append((
-        "prefix_jaccard_pairs (exact all-pairs similarity, Bayardo 2007)",
-        "Candidate generation equi-joins on PREFIX shingles only (rare-"
-        "first order: the window ranks by document frequency asc, so the "
-        "quadratic stop-shingle buckets never meet); verification is a "
-        "|candidates|-bounded array_intersect Project. No shingle "
-        "self-join over the full sets, no CartesianProduct — the result "
-        "set is provably identical to the exhaustive join. Stop-shingle "
-        "skew hardening (r5): the frequency-annotation join routes the "
-        "Zipf HEAD of the vocabulary through BROADCAST hash joins (hot "
-        "inner + the two anti-join exclusions — visible below as the "
-        "BroadcastHashJoins feeding the pre-window union), so a shingle "
-        "present in most documents never lands its row mass in one "
-        "shuffle partition; only the tail — every key's row count "
-        "bounded by the head's minimum df — takes the shuffle join.",
+        "prefix_jaccard_pairs, in-row path (vocabulary <= 2^13)",
+        "The docs fixture's vocabulary is small, so each doc ranks its "
+        "shingles in-row against the broadcast global order (df asc, "
+        "shingle asc) and emits one row: its prefix array and its shingle "
+        "set as a bitset. That row set is materialized once (Scan "
+        "ExistingRDD) and feeds both sides of the candidate equi-join, "
+        "whose prefix is exploded in the JVM (Generate), and the verify, "
+        "which is the popcount (bit_count) of the ANDed bitsets. No Window, "
+        "no shuffle of the exploded shingle stream, no CartesianProduct.",
         plan(prefix_jaccard_pairs(docs, shingle_k=5, threshold=0.7)),
+    ))
+    # 260 pseudo-random letters per doc: > 2^13 distinct shingles
+    open_vocab = docs.withColumn("text", F.concat_ws(" ", "text", F.expr(
+        "concat_ws('', transform(sequence(1, 260), i -> substring("
+        "'abcdefghijklmnopqrstuvwxyz', cast(pmod(xxhash64(text, i), 26) as int) + 1, 1)))"
+    )))
+    sections.append((
+        "prefix_jaccard_pairs, relational path (vocabulary > 2^13)",
+        "An open vocabulary: the frequency annotation routes the 4096 most "
+        "frequent shingles through BROADCAST hash joins (hot inner + the "
+        "two anti-join exclusions, feeding the pre-window union), so a "
+        "shingle present in most documents never lands its row mass in "
+        "one shuffle partition; only the tail takes a shuffle join. A "
+        "Window over doc ids ranks each doc's shingles; candidate "
+        "generation equi-joins on prefix shingles only; the verify "
+        "intersects xxhash64-recoded shingle arrays (array_intersect), a "
+        "|candidates|-bounded Project. No CartesianProduct.",
+        plan(prefix_jaccard_pairs(open_vocab, shingle_k=5, threshold=0.7)),
     ))
 
     ev = spark.read.parquet(f"{SF}/events.parquet").select(
