@@ -58,7 +58,13 @@ def shingles_expr(text_col: str, k: int) -> Column:
 def with_shingles(df: DataFrame, text_col: str, k: int, out_col: str = "_sh") -> DataFrame:
     """Project normalized text ONCE, then shingle it — the lambda references
     the materialized column, so the normalization regex runs once per row,
-    not once per array element."""
+    not once per array element.
+
+    Explode the result with ``explode_outer``: a plain ``explode`` lets
+    Spark infer ``size(_sh) > 0`` and push it below the ``_nrm``
+    projection, which inlines the regex into the shingle lambda again
+    (19.3 s against 2.0 s at sf0.1). The array is never empty, so the two
+    explodes give the same rows."""
     return (
         df.withColumn("_nrm", _norm(F.col(text_col)))
         .withColumn(
@@ -530,12 +536,12 @@ def split_contamination(
     vocabulary, not corpus length."""
     tg = (
         with_shingles(ensure_parallelism(train.select(text_col)), text_col, k)
-        .select(F.explode("_sh").alias("_g"))
+        .select(F.explode_outer("_sh").alias("_g"))
         .distinct()
     )
     vg = with_shingles(
         ensure_parallelism(val.select(id_col, text_col)), text_col, k
-    ).select(F.col(id_col), F.explode("_sh").alias("_g"))
+    ).select(F.col(id_col), F.explode_outer("_sh").alias("_g"))
     return (
         vg.join(tg, "_g", "left_semi")
         .groupBy(id_col)
@@ -568,7 +574,7 @@ def ngram_jaccard_pairs(
         F.col(id_col), F.col("_sh")
     )
     sizes = sh.select(id_col, F.size("_sh").alias("_n"))
-    ex = sh.select(id_col, F.explode("_sh").alias("_s"))
+    ex = sh.select(id_col, F.explode_outer("_sh").alias("_s"))
     if max_df is not None:
         rare = (
             ex.groupBy("_s")

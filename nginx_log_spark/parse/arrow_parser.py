@@ -8,7 +8,11 @@ Two-tier design (exactly the reference's semantics):
   per-row Python objects anywhere. Byte-mode RE2 == the reference's
   byte-oriented cursor parser on this shape. A line matching STRICT is
   provably parsed identically by the C combinators (fuzz-verified in
-  tests/test_arrow_parser.py).
+  tests/test_arrow_parser.py). The extraction captures four groups
+  (remote_addr, remote_user, time_local and the quoted tail) and splits
+  the tail for the other six fields: RE2's one-pass matcher takes at most
+  4 captures, and on one 62.5k-line batch extraction cost 68-73 ms with
+  1-4 captures, 168 ms with 5 and 239-265 ms with 9 (see ``_uncapture``).
 - EXACT tier (Python, ~1% of rows): anything not strict — multi-space
   separators, malformed lines, trailing junk — goes through the
   atomic-group regex of parser.py, which is byte-parity with the C
@@ -138,11 +142,13 @@ def _uncapture(pattern: str, keep: set[str]) -> str:
     """Demote named groups not in ``keep`` to non-capturing groups.
 
     The match SET is provably unchanged (group naming never affects what
-    a regex matches), and RE2's extraction cost scales with the number of
-    capturing groups — measured 143 ms -> 53 ms per 65k-line batch going
-    from 9 captures to 1. Used for the manual projection pushdown below:
-    a consumer that asked for two fields should not pay submatch capture
-    for nine."""
+    a regex matches), but RE2's extraction cost depends on the number of
+    capturing groups. RE2 runs its one-pass matcher only while the
+    submatches fit ``$0``-``$4`` (at most 4 groups); with more it falls
+    back to a slower engine. Measured per 62.5k-line batch: 68-73 ms with
+    1-4 captures, 168 ms with 5, 239-265 ms with 9. Used by the
+    extended-tail mode (projection pushdown: a consumer that asked for two
+    fields should not pay for nine) and by ``_one_pass_pattern``."""
     import re
 
     return re.sub(
@@ -150,6 +156,43 @@ def _uncapture(pattern: str, keep: set[str]) -> str:
         lambda m: f"(?P<{m.group(1)}>" if m.group(1) in keep else "(?:",
         pattern,
     )
+
+
+# pieces of the strict tail `"request" status bytes "referer" "ua" "xff"`
+# split on '"' (every quoted field is [^"]*, so there are exactly 9), and of
+# piece 2, ` status bytes `, split on ' '
+_TAIL_PIECE = {"request": 1, "http_referer": 3, "http_user_agent": 5, "http_x_forwarded_for": 7}
+_CODE_PIECE = {"status": 1, "body_bytes_sent": 2}
+
+
+def _one_pass_pattern(pattern: str) -> str:
+    """The core strict pattern with four captures: remote_addr, remote_user,
+    time_local and a ``tail`` group from the request's opening quote to the
+    end of the line. Same regex, so the same match set; four groups keep
+    RE2 on its one-pass matcher (see ``_uncapture``), and
+    ``_split_tail`` recovers the other six fields. This can go when the
+    Arrow/RE2 pair no longer slows down above 4 captures."""
+    i = pattern.index(' "(?P<request>')
+    return pattern[:i] + " (?P<tail>" + _uncapture(pattern[i + 1 : -1], set()) + ")$"
+
+
+def _nth_piece(pieces: pa.ListArray, j: int) -> pa.Array:
+    """Piece j of every list. Lists shorter than j+1 (rows the strict regex
+    missed, whose captures are '') get some other piece; the caller
+    overwrites those rows with the fallback tier's values."""
+    vals = pieces.values
+    idx = np.minimum(pieces.offsets.to_numpy()[:-1] + j, len(vals) - 1)
+    return vals.take(pa.array(idx))
+
+
+def _split_tail(tail: pa.Array, names: list[str]) -> dict[str, pa.Array]:
+    """The strict tail's fields in ``names``, by two splits (see _TAIL_PIECE)."""
+    pieces = pc.split_pattern(tail, pattern='"')
+    out = {n: _nth_piece(pieces, j) for n, j in _TAIL_PIECE.items() if n in names}
+    if any(n in names for n in _CODE_PIECE):
+        code = pc.split_pattern(_nth_piece(pieces, 2), pattern=" ")
+        out.update({n: _nth_piece(code, j) for n, j in _CODE_PIECE.items() if n in names})
+    return out
 
 
 def _parse_binary_lines(
@@ -163,11 +206,13 @@ def _parse_binary_lines(
     non-UTF8 bytes, matching ``parser.decode_tokens``).
 
     ``needed``: projection pushdown INTO the kernel (None = all fields).
-    Validity is always computed with the identical two-tier rule; the
-    strict tier then only pays for the submatches actually requested —
-    an empty ``needed`` (valid-only consumers, e.g. a count) runs the
-    boolean ``match_substring_regex`` kernel, measured 6.6x faster than
-    9-group extraction on the same batch."""
+    Validity is always computed with the identical two-tier rule. An
+    empty ``needed`` (valid-only consumers, e.g. a count) runs the boolean
+    ``match_substring_regex`` kernel, measured 6.6x faster than 9-group
+    extraction on the same batch; any other core subset takes the one
+    four-capture extraction (``_one_pass_pattern``) and splits the tail
+    only when it needs a tail field. The extended mode demotes the
+    unrequested groups (``_uncapture``)."""
     names = FIELD_NAMES + (EXT_FIELD_NAMES if extended else [])
     if needed is not None:
         names = [n for n in names if n in set(needed)]
@@ -199,13 +244,18 @@ def _parse_binary_lines(
             valid = pc.replace_with_mask(valid, pa.array(miss_np), pa.array(fb_valid))
         return {"valid": valid}
 
-    if len(names) < len(all_names):
-        pattern = _uncapture(pattern, set(names))
-    res = pc.extract_regex(lines, pattern=pattern)
+    if extended:
+        if len(names) < len(all_names):
+            pattern = _uncapture(pattern, set(names))
+        res = pc.extract_regex(lines, pattern=pattern)
+        fields: dict[str, pa.Array] = {name: res.field(name) for name in names}
+    else:
+        res = pc.extract_regex(lines, pattern=_one_pass_pattern(pattern))
+        fields = {name: res.field(name) for name in names if name in FIELD_NAMES[:3]}
+        fields.update(_split_tail(res.field("tail"), names))
     miss = pc.is_null(res)
     n_miss = pc.sum(miss).as_py() or 0
 
-    fields: dict[str, pa.Array] = {name: res.field(name) for name in names}
     if extended:
         # RE2 reports non-participating optional groups as '' — but every
         # extended-tail run is >=1 char, so '' unambiguously means absent
@@ -294,10 +344,9 @@ def parse_sequences_arrow(
     the JVM — measured 3-4x the parse kernel's own cost at 8M rows.
     ``fields`` selects which parsed columns to emit AND is pushed into
     the kernel itself (round 6): validity is always decided by the full
-    two-tier rule, but the strict tier only captures the requested
-    submatches — valid-only consumers run the boolean match kernel
-    (6.6x cheaper), partial field sets demote unrequested groups to
-    non-capturing (2.6x). ``keep_cols`` selects which input columns to
+    two-tier rule; valid-only consumers run the boolean match kernel
+    (6.6x cheaper), other field sets skip the tail split when they need
+    no tail field. ``keep_cols`` selects which input columns to
     echo; None = all (the default, schema-compatible with round-1
     callers).
     """

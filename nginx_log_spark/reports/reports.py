@@ -290,6 +290,8 @@ def _hour_key_arrow(tl):
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    if isinstance(tl, pa.ChunkedArray):
+        tl = tl.combine_chunks()
     res = pc.extract_regex(tl, pattern=_TIME_RE)
     # non-matching rows null the STRUCT but not its children — mask fields
     ok = pc.is_valid(res)
@@ -327,6 +329,14 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
     pays the same cost as one giant in-RAM table); it amortizes at 100 TB
     where the span saturates, and every other dim stays ~10^3 rows.
 
+    Per batch the kernel groups nine dims by key. The hourly dim is not a
+    tenth group-by over the rows: ``_hour_key_arrow`` runs on the distinct
+    ``time_local`` keys of the per-second partial, whose (cnt, bytes) are
+    then summed by hour. That is exact, because the hour is a function of
+    the time string and the sums are integers; on a 62.5k-line zipf batch
+    it parses about 1,200 strings instead of 62.5k. Only ``tokens_col``
+    is sent to the kernel: each column it is sent costs Arrow IPC per row.
+
     Input: the raw sequences table. Output: identical to fused_reports.
     """
     import pyarrow as pa
@@ -339,39 +349,44 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
     def op(batches):
         import pyarrow.compute as pc
 
+        null_s = pa.scalar(None, pa.string())
         parts: list[pa.Table] = []
+
+        def add(dim_id, key, cnt, nbytes):
+            parts.append(pa.table({
+                "dim_id": pa.array([dim_id] * len(key), pa.int32()),
+                "key0": key, "cnt": pc.cast(cnt, pa.int64()), "bytes": nbytes,
+            }))
+
         for b in batches:
-            tok = b.column(b.schema.get_field_index(tokens_col))
-            parsed = _parse_binary_lines(_tokens_to_binary(tok))
+            parsed = _parse_binary_lines(_tokens_to_binary(b.column(0)))
             valid = parsed["valid"]
             body = pc.if_else(valid, parsed["body_bytes_sent"], pa.scalar(None, pa.int64()))
-            keys = [
-                parsed["remote_addr"], parsed["remote_user"],
-                parsed["http_x_forwarded_for"], parsed["request"],
-                parsed["http_user_agent"], parsed["http_referer"],
-                parsed["time_local"], parsed["status"],
-                _hour_key_arrow(parsed["time_local"]),
-                pc.if_else(
+            # _FUSED_DIMS order; the hourly dim 8 comes from dim 6's partial
+            keys = {
+                0: parsed["remote_addr"], 1: parsed["remote_user"],
+                2: parsed["http_x_forwarded_for"], 3: parsed["request"],
+                4: parsed["http_user_agent"], 5: parsed["http_referer"],
+                6: parsed["time_local"], 7: parsed["status"],
+                9: pc.if_else(
                     pc.and_kleene(valid, pc.not_equal(parsed["status"], "200")),
                     pc.binary_join_element_wise(parsed["status"], parsed["request"], _SEP),
-                    pa.scalar(None, pa.string()),
+                    null_s,
                 ),
-            ]
-            for dim_id, key in enumerate(keys):
-                key = pc.if_else(valid, key, pa.scalar(None, pa.string()))
+            }
+            for dim_id, key in keys.items():
+                key = pc.if_else(valid, key, null_s)
                 t = pa.table({"key0": key, "b": body})
                 g = t.group_by("key0").aggregate([("b", "sum"), ("b", "count")])
                 g = g.filter(pc.is_valid(g.column("key0")))
-                parts.append(
-                    pa.table(
-                        {
-                            "dim_id": pa.array([dim_id] * len(g), pa.int32()),
-                            "key0": g.column("key0"),
-                            "cnt": pc.cast(g.column("b_count"), pa.int64()),
-                            "bytes": g.column("b_sum"),
-                        }
-                    )
-                )
+                add(dim_id, g.column("key0"), g.column("b_count"), g.column("b_sum"))
+                if dim_id == 6:  # exact: see the docstring
+                    h = pa.table({
+                        "key0": _hour_key_arrow(g.column("key0")),
+                        "c": g.column("b_count"), "b": g.column("b_sum"),
+                    }).group_by("key0").aggregate([("c", "sum"), ("b", "sum")])
+                    h = h.filter(pc.is_valid(h.column("key0")))
+                    add(8, h.column("key0"), h.column("c_sum"), h.column("b_sum"))
         if not parts:
             return
         merged = (
@@ -390,7 +405,9 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
         for batch in out.to_batches(max_chunksize=1 << 20):
             yield batch
 
-    partials = seq.mapInArrow(op, "dim_id int, key0 string, cnt long, bytes long")
+    partials = seq.select(tokens_col).mapInArrow(
+        op, "dim_id int, key0 string, cnt long, bytes long"
+    )
     return _rank_partials(partials, k)
 
 

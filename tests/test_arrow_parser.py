@@ -16,6 +16,7 @@ import pytest
 from nginx_log_spark.datagen import loggen
 from nginx_log_spark.parse import oracle
 from nginx_log_spark.parse.arrow_parser import (
+    FIELD_NAMES,
     _parse_binary_lines,
     _tokens_to_binary,
     parse_line_py,
@@ -75,32 +76,71 @@ def test_two_tier_full_byte_range_fuzz_matches_oracle():
         assert _norm(parse_line_py(s)) == _norm(oracle.parse_line(s)), repr(s)
 
 
-def test_full_byte_range_batch_matches_scalar():
-    """The SAME full-byte-range lines through the Arrow batch path (binary
-    arrays + RE2 bytes mode + latin-1 fallback) == the scalar two-tier."""
-    rnd = random.Random(7)
-    alphabet = [chr(b) for b in range(1, 256) if b != 10]
-    base = (
-        '1.2.3.4 - - [10/Oct/2000:13:55:36 -0700] "GET /a HTTP/1.1" 200 2326 '
-        '"http://r/" "Mozilla (X11; Linux)" "-"'
-    )
+_BASE = (
+    '1.2.3.4 - - [10/Oct/2000:13:55:36 -0700] "GET /a HTTP/1.1" 200 2326 '
+    '"http://r/" "Mozilla (X11; Linux)" "-"'
+)
+# every byte but \n, and one weighted to the bytes the strict tail split
+# depends on: quotes, brackets and spaces
+_FULL_BYTES = [chr(b) for b in range(1, 256) if b != 10]
+_SPLIT_BYTES = list('""""]]]    ') + list("0123456789-[\x01\xff")
+
+
+def _mutated(rnd, alphabet, n):
     lines = []
-    for _ in range(4000):
-        s = base
+    for _ in range(n):
+        s = _BASE.replace(" 200 ", f" {'5' * rnd.randint(1, 5)} ") if rnd.random() < 0.3 else _BASE
         for _ in range(rnd.randint(1, 4)):
             p = rnd.randrange(len(s))
-            s = s[:p] + rnd.choice(alphabet) + s[p + 1 :]
+            op = rnd.random()
+            if op < 0.5:
+                s = s[:p] + rnd.choice(alphabet) + s[p + 1 :]
+            elif op < 0.7:
+                s = s[:p] + s[p + 1 :]
+            else:
+                s = s[:p] + rnd.choice(alphabet) + s[p:]
         lines.append(s)
+    return lines
+
+
+def test_full_byte_range_batch_matches_scalar():
+    """The SAME mutated lines through the Arrow batch path (binary arrays,
+    RE2 bytes mode, the four-capture extraction and its tail split, the
+    latin-1 fallback) == the scalar two-tier (Python ``re`` over the
+    nine-group pattern), in both status modes, mutating over every byte and
+    over the bytes the split reads."""
+    for status_3digit in (True, False):
+        for alphabet in (_FULL_BYTES, _SPLIT_BYTES):
+            rnd = random.Random(7 + status_3digit)
+            lines = _mutated(rnd, alphabet, 4000)
+            binary = pa.array([s.encode("latin-1") for s in lines], type=pa.binary())
+            out = _parse_binary_lines(binary, status_3digit=status_3digit)
+            n_valid = 0
+            for i, s in enumerate(lines):
+                exp = parse_line_py(s, status_3digit)
+                assert out["valid"][i].as_py() == (exp is not None), repr(s)
+                if exp is not None:
+                    n_valid += 1
+                    for name in FIELD_NAMES:
+                        assert out[name][i].as_py() == exp[name], (name, repr(s))
+            assert 400 < n_valid < 3600  # both outcomes are exercised
+
+
+@pytest.mark.parametrize("status_3digit", [True, False])
+def test_needed_subsets_equal_full_parse(status_3digit):
+    """Any subset of the core fields parses to the same columns (and the
+    same validity) as the full parse."""
+    rnd = random.Random(5)
+    lines = _mutated(rnd, _SPLIT_BYTES, 1500)
     binary = pa.array([s.encode("latin-1") for s in lines], type=pa.binary())
-    out = _parse_binary_lines(binary)
-    for i, s in enumerate(lines):
-        exp = parse_line_py(s)
-        assert out["valid"][i].as_py() == (exp is not None), repr(s)
-        if exp is not None:
-            for name, arr in out.items():
-                if name == "valid":
-                    continue
-                assert arr[i].as_py() == exp[name], (name, repr(s))
+    full = _parse_binary_lines(binary, status_3digit=status_3digit)
+    for size in range(1, 9):
+        for _ in range(3):
+            needed = rnd.sample(FIELD_NAMES, size)
+            out = _parse_binary_lines(binary, status_3digit=status_3digit, needed=needed)
+            assert sorted(out) == sorted(needed + ["valid"])
+            for name in out:
+                assert out[name].equals(full[name]), (needed, name)
 
 
 def test_strict_tier_is_subset_of_oracle_accepts():

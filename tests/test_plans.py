@@ -113,6 +113,35 @@ def test_fused_report_partials_are_map_side(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
+def test_fused_report_kernel_reads_only_tokens(spark, sf_dir):
+    """Only the token arrays cross into the Python kernel: the op never
+    reads doc_id, n_tok or source, and each column it is sent costs Arrow
+    IPC per row."""
+    from nginx_log_spark.parity import events_with_log_columns
+    from nginx_log_spark.reports.reports import fused_reports_arrow
+
+    seq = events_with_log_columns(spark, sf_dir).select("doc_id", "tokens", "n_tok", "source")
+    nodes = re.findall(r"\(\d+\) MapInArrow\s*\nInput \[(\d+)\]: \[(\w+)#", plan(fused_reports_arrow(seq)))
+    assert nodes and all(n == ("1", "tokens") for n in nodes), nodes
+
+
+@pytest.mark.parametrize("op", ["ngram_jaccard_pairs", "split_contamination"])
+def test_shingle_explode_keeps_normalisation_above_scan(spark, docs, op):
+    """The shingle explodes must not let Spark push an inferred
+    ``size(_sh) > 0`` filter below the normalised-text projection: that
+    filter inlines the normalisation regex once per shingle position."""
+    from nginx_log_spark.functions import dedup
+
+    if op == "split_contamination":
+        out = dedup.split_contamination(docs.filter("doc_id % 2 = 0"), docs.filter("doc_id % 2 = 1"))
+    else:
+        out = dedup.ngram_jaccard_pairs(docs)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    filters = [ln for ln in optimized.splitlines() if ln.lstrip(" :+-").startswith("Filter ")]
+    assert filters
+    assert not [f for f in filters if "regexp_replace" in f], filters
+
+
 def test_rank_partials_has_no_per_dim_single_window(spark):
     """The fused tail's heavy ranking window must partition by the hash
     BUCKET as well as (dim, section) — a window keyed only by dim sorts the

@@ -256,6 +256,55 @@ def test_fused_reports_arrow_matches_fused(spark):
         assert list(a) == list(b), c
 
 
+def test_arrow_hourly_dim_equals_per_row_hour_keys(spark):
+    """fused_reports_arrow derives the hourly dim from each batch's
+    distinct time_local partials. It must equal counts and bytes summed by
+    the per-row _hour_key_arrow: over valid lines whose times do not parse
+    (no offset, a bad month, hour 25) beside mixed offsets, and with
+    several Arrow batches per partition."""
+    import pyarrow as pa
+    from pyspark.sql import functions as F
+
+    from nginx_log_spark.parse.parser import encode_lines
+
+    times = [
+        "10/Oct/2000:13:55:36 +0000", "10/Oct/2000:15:55:36 +0200",
+        "10/Oct/2000:08:25:36 -0530", "10/Oct/2000:13:05:07 -0000",
+        "11/Oct/2000:00:59:59 +0100", "10/Oct/2000:23:10:00 -0100",
+        "10/Oct/2000:13:55:36",  # no offset
+        "10/Foo/2000:13:55:36 +0000",  # bad month
+        "10/Oct/2000:25:00:00 +0000",  # hour 25
+    ]
+    # chunked, as a group_by key column is
+    hours = R._hour_key_arrow(pa.chunked_array([times[:4], times[4:]])).to_pylist()
+    assert hours[6:] == [None] * 3 and len(set(hours[:6])) == 3
+
+    rows, exp = [], {}
+    for i in range(400):
+        t = (i * 7) % len(times)
+        rows.append((f"d{i}", f'10.0.0.{i % 5} - - [{times[t]}] "GET /a HTTP/1.1" 200 {i * 3} "" "u" ""'))
+        if hours[t] is not None:
+            c = exp.setdefault(hours[t], [0, 0])
+            c[0] += 1
+            c[1] += i * 3
+
+    seq = spark.createDataFrame(rows, "doc_id string, line string").select(
+        "doc_id", encode_lines(F.col("line")).alias("tokens")
+    ).repartition(2)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for batch_rows in (old, "16"):
+            spark.conf.set(key, batch_rows)
+            got = {
+                r["key"]: [r["cnt"], r["bytes"]]
+                for r in R.fused_reports_arrow(seq, 2).filter(F.col("dim") == "hourly").collect()
+            }
+            assert got == exp, batch_rows
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_cli_extension_flags(tmp_path):
     """--paths/--bursts append extension tables after the parity report
     (subprocess: the CLI owns and stops its own SparkSession)."""
