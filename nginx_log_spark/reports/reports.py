@@ -10,14 +10,15 @@ that one result, so the CLI, the pipeline and the graded ``log_*``
 queries read the same engine.
 
 Scale notes (100 TB):
-- the only shuffle carries map-side-aggregated (dim, key) partials, never
-  raw rows;
-- the per-dim top-K is two-phase: a window over (dim, section, hash
-  bucket of the key) keeps each bucket's top k by count and by bytes, and
-  the exact ranks are computed on those survivors, so no task sorts a
-  whole dimension (the per-second time dim is near row-sized);
-- section totals (header totals, per-code subtotals) come from a ~10^2-row
-  aggregate broadcast back, not from the ranking window;
+- the only rows-sized shuffle carries map-side-aggregated (dim, key)
+  partials, never raw rows, into the final aggregate;
+- the per-dim top-K is a local cut, then an exact merge: each partition
+  of the final aggregate keeps its top k by count and by bytes of every
+  (dim, section) slice, so the ranking's input is at most 2·k rows per
+  section per partition, and no task sorts a whole dimension (the
+  per-second time dim is near row-sized);
+- section totals (header totals, per-code subtotals) are window sums of
+  the per-partition slice totals the cut carries; nothing is broadcast;
 - the views are filters and projections of the persisted fused result
   (about k rows per ranked section plus one row per hour), so the 11
   report frames cost one fused job;
@@ -158,8 +159,9 @@ def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
     structs in the explode triple string-copy garbage and anti-scale under
     GC pressure; measured 2.6x slower), then one groupBy(dim, key) with
     map-side partial agg (only ~10^4-10^5 aggregated keys shuffle), then
-    ONE window ranking per dim. bytes_by_request needs no extra dim: the
-    request dim already aggregates sum(bytes), ranked via rn_bytes.
+    the cut-and-rank tail of ``_rank_partials``. bytes_by_request needs no
+    extra dim: the request dim already aggregates sum(bytes), ranked via
+    rn_bytes.
 
     Output: (dim, key, key2, cnt, bytes, section_total, section_bytes,
     section_keys, rn, rn_bytes) — key2 = request within bad_code sections
@@ -187,7 +189,7 @@ def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
         F.col("body_bytes_sent").alias("_b"),
     ).filter(F.col("key0").isNotNull())
     # row-level partials (cnt=1): _rank_partials' groupBy is then the ONE
-    # partial+final aggregation, and its two-phase top-K replaces the
+    # partial+final aggregation, and its cut-then-rank top-K replaces the
     # single-task-per-dim window (see _rank_partials)
     partials = ex.select(
         "dim_id", "key0", F.lit(1).alias("cnt"), F.col("_b").alias("bytes")
@@ -195,85 +197,139 @@ def fused_reports(parsed: DataFrame, k: int = TOP_K) -> DataFrame:
     return _rank_partials(partials, k)
 
 
-def _rank_partials(agg: DataFrame, k: int, buckets: int = 64) -> DataFrame:
+def _rank_partials(agg: DataFrame, k: int) -> DataFrame:
     """Final agg + per-dim top-K ranking over (dim_id, key0, cnt, bytes)
     partials — shared tail of both fused implementations.
 
-    Two-phase top-K: a single window PARTITIONED ONLY BY DIM would sort the
-    whole per-second time dimension (millions of aggregated rows at scale)
-    in ONE task — the classic anti-scale single-partition window. Phase 1
-    pre-ranks within (dim, section, hash-bucket of the key): any global
-    top-k row (by count OR by bytes) is top-k in its own bucket
-    (bucket ⊆ dim), so the survivors (≤ 2·k·buckets per dim) provably
-    contain both answers; phase 2 computes the EXACT ranks on that small
-    set. Phase 1 retains the per-bucket bytes top-k for EVERY dim (not
-    just the request dim): a row kept only via one ranking can carry the
-    other rank underestimated vs the full set, but never below k+1 — the
-    global top-k of that ranking all survive and outrank it — so every
-    `rn <= k` / `rn_bytes <= k` consumer sees identical rows and ranks as
-    the one-window plan, for every dim.
+    Three steps, and only the first moves rows-sized data:
 
-    The hourly dim is a full report, not a top-K one: its rows pass both
-    cuts (at most 8,760 hours a year, so the phase-2 window stays small).
+    1. the final ``groupBy(dim_id, key0)``: after its one exchange every
+       key sits in exactly one partition with its exact sums; ``_sk`` is
+       the section (the status of a bad_code key, null otherwise);
+    2. a local cut per partition (``_top_k_cut``, one ``mapInArrow``)
+       keeps each (dim, section) slice's top k by count and by bytes plus
+       every hourly row, and puts the slice totals on the slice's rank-1
+       row. Any global top-k row (by count OR by bytes) is top-k within
+       its own partition's slice, so the survivors (at most 2·k per
+       section per partition) contain both answers;
+    3. exact ranks on the survivors: one window over (dim, section) gives
+       ``rn``, ``rn_bytes`` and the section totals (the sums of the
+       slices' totals: header totals and per-code subtotals,
+       c/main.c:487-494, :326-331).
 
-    Section totals (header totals / per-code subtotals, c/main.c:487-494,
-    :326-331) come from a separate ~10²-row aggregate broadcast back, not
-    from the big window.
+    No task sorts a whole dimension, which a window partitioned only by
+    dim would do for the near-row-sized per-second time dim. The cut keeps
+    the bytes top-k for EVERY dim, not just the request dim: a row kept
+    only via one ranking can carry the other rank underestimated vs the
+    full set, but never below k+1 — the global top-k of that ranking all
+    survive and outrank it — so every ``rn <= k`` / ``rn_bytes <= k``
+    consumer sees the rows and ranks of one window over the whole dim.
+
+    The hourly dim is a full report, not a top-K one: its rows pass the
+    cut (at most 8,760 hours a year, so the window stays small).
     """
     agg = agg.groupBy("dim_id", "key0").agg(
         F.sum("cnt").alias("cnt"), F.sum("bytes").alias("bytes")
-    )
-    is_bad = F.col("dim_id") == 9
-    is_hourly = F.col("dim_id") == 8
-    bad = F.split(F.col("key0"), _SEP, 2)  # [status, request] (see _SEP note)
-    named = agg.select(
-        F.element_at(F.array(*[F.lit(d) for d in _FUSED_DIMS]), F.col("dim_id") + 1).alias("dim"),
-        F.col("dim_id"),
-        F.when(is_bad, bad[0]).otherwise(F.col("key0")).alias("key"),
-        F.when(is_bad, bad[1]).alias("key2"),
-        F.col("key0"),
-        "cnt",
-        "bytes",
-    )
-    # window partition keys as plain columns, so the two windows of each
-    # phase share one exchange (partition expressions would each be
-    # re-aliased and re-shuffled)
-    named = named.withColumn("_sk", F.when(is_bad, F.col("key"))).withColumn(
-        "_bk", F.pmod(F.xxhash64("key0"), F.lit(buckets))
-    )
-    sect = named.groupBy(F.col("dim_id").alias("_sd"), F.col("_sk").alias("_ss")).agg(
-        F.sum("cnt").alias("section_total"),
-        F.sum("bytes").alias("section_bytes"),
-        F.count(F.lit(1)).alias("section_keys"),
-    )
-    wp = W.partitionBy("dim_id", "_sk", "_bk")
-    pre = (
-        named.withColumn(
-            "_rn1", F.row_number().over(wp.orderBy(F.desc("cnt"), F.asc("key0")))
-        )
-        .withColumn(
-            "_rb1", F.row_number().over(wp.orderBy(F.desc("bytes"), F.asc("key0")))
-        )
-        .filter((F.col("_rn1") <= k) | (F.col("_rb1") <= k) | is_hourly)
+    ).withColumn("_sk", F.when(F.col("dim_id") == 9, F.substring_index("key0", _SEP, 1)))
+    cut = agg.mapInArrow(
+        _top_k_cut(k),
+        "dim_id int, key0 string, _sk string, cnt long, bytes long, _st long, _sb long, _sn long",
     )
     w = W.partitionBy("dim_id", "_sk")
+    by_cnt = w.orderBy(F.desc("cnt"), F.asc("key0"))
+    # the totals' whole-section frame on the count order: no third sort
+    sect = by_cnt.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    is_bad = F.col("dim_id") == 9
+    bad = F.split(F.col("key0"), _SEP, 2)  # [status, request] (see _SEP note)
     return (
-        pre.withColumn("rn", F.row_number().over(w.orderBy(F.desc("cnt"), F.asc("key0"))))
-        .withColumn("rn_bytes", F.row_number().over(w.orderBy(F.desc("bytes"), F.asc("key0"))))
+        cut.select(
+            "dim_id", "key0", "cnt", "bytes",
+            F.sum("_st").over(sect).alias("section_total"),
+            F.sum("_sb").over(sect).alias("section_bytes"),
+            F.sum("_sn").over(sect).alias("section_keys"),
+            F.row_number().over(by_cnt).alias("rn"),
+            F.row_number().over(w.orderBy(F.desc("bytes"), F.asc("key0"))).alias("rn_bytes"),
+        )
         .filter(
             (F.col("rn") <= k)
             | ((F.col("dim_id") == 3) & (F.col("rn_bytes") <= k))
-            | is_hourly
-        )
-        .join(
-            F.broadcast(sect),
-            (F.col("dim_id") == F.col("_sd")) & F.col("_sk").eqNullSafe(F.col("_ss")),
+            | (F.col("dim_id") == 8)
         )
         .select(
-            "dim", "dim_id", "key", "key2", "cnt", "bytes",
-            "section_total", "section_bytes", "section_keys", "rn", "rn_bytes",
+            F.element_at(F.array(*[F.lit(d) for d in _FUSED_DIMS]), F.col("dim_id") + 1).alias("dim"),
+            "dim_id",
+            F.when(is_bad, bad[0]).otherwise(F.col("key0")).alias("key"),
+            F.when(is_bad, bad[1]).alias("key2"),
+            "cnt", "bytes", "section_total", "section_bytes", "section_keys", "rn", "rn_bytes",
         )
     )
+
+
+def _top_k_cut(k: int):
+    """``mapInArrow`` body of ``_rank_partials``' local cut.
+
+    Over one partition of final-aggregated (dim_id, key0, cnt, bytes, _sk)
+    rows: sort once by (slice, cnt desc, key0) and once by (slice, bytes
+    desc, key0), where a slice is one (dim_id, _sk) pair, and keep the
+    rows ranked at most k in either order, plus every hourly row. The
+    slice's rank-1 row by count always survives and carries the slice's
+    totals (_st, _sb, _sn: sum of cnt, sum of bytes, number of keys); the
+    sums are null only when every summand is, as Spark's ``sum``. The
+    orders are Spark's: descending puts nulls last, and strings compare
+    bytewise.
+    """
+
+    def op(batches):
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = [b for b in batches if b.num_rows]  # an empty partition sends one
+        if not batches:
+            return
+        t = pa.Table.from_batches(batches)
+        n = t.num_rows
+        sk = pc.dictionary_encode(t.column("_sk").combine_chunks())
+        dim = t.column("dim_id").to_numpy().astype(np.int64)
+        slice_id = dim * (len(sk.dictionary) + 1) + pc.fill_null(sk.indices, -1).to_numpy() + 1
+        s = pa.table({"s": slice_id, "cnt": t.column("cnt"), "bytes": t.column("bytes"),
+                      "key0": t.column("key0")})
+
+        def ranked(by):
+            # row positions in (slice, by desc, key0) order, where each
+            # slice starts in that order, and each position's 0-based rank
+            order = pc.sort_indices(
+                s, sort_keys=[("s", "ascending"), (by, "descending"), ("key0", "ascending")]
+            ).to_numpy()
+            ss = slice_id[order]
+            first = np.flatnonzero(np.r_[True, ss[1:] != ss[:-1]])
+            return order, first, np.arange(n) - np.repeat(first, np.diff(np.r_[first, n]))
+
+        mask = dim == 8
+        by_bytes, _, rank = ranked("bytes")
+        mask[by_bytes[rank < k]] = True
+        order, first, rank = ranked("cnt")
+        mask[order[rank < k]] = True
+
+        def slice_sum(name):
+            col = t.column(name).combine_chunks()
+            vals = pc.fill_null(col, 0).to_numpy()[order]
+            some = np.logical_or.reduceat(col.is_valid().to_numpy(zero_copy_only=False)[order], first)
+            return pa.array(np.add.reduceat(vals, first), pa.int64(), mask=~some)
+
+        # each slice's totals, on its rank-1 row by count
+        at = np.full(n, -1, np.int64)
+        at[order[first]] = np.arange(len(first))
+        head = pa.array(at, mask=at < 0)
+        out = pa.table({
+            "dim_id": t.column("dim_id"), "key0": t.column("key0"), "_sk": t.column("_sk"),
+            "cnt": t.column("cnt"), "bytes": t.column("bytes"),
+            "_st": slice_sum("cnt").take(head), "_sb": slice_sum("bytes").take(head),
+            "_sn": pa.array(np.diff(np.r_[first, n]), pa.int64()).take(head),
+        }).filter(pa.array(mask))
+        yield from out.to_batches(max_chunksize=1 << 16)
+
+    return op
 
 
 # canonical combined-format time: 'dd/Mon/yyyy:HH:mm:ss +ZZZZ'
@@ -305,7 +361,9 @@ def _hour_key_arrow(tl):
     )
     off = pc.if_else(pc.equal(fld("sign"), "-"), pc.negate(off), off)
     utc = pc.cast(pc.subtract(pc.cast(dt, pa.int64()), off), pa.timestamp("s"))
-    return pc.strftime(pc.floor_temporal(utc, unit="hour"), format="%Y-%m-%d %H")
+    # format each distinct hour once: a batch spans few hours, many seconds
+    hours = pc.dictionary_encode(pc.floor_temporal(utc, unit="hour"))
+    return pc.take(pc.strftime(hours.dictionary, format="%Y-%m-%d %H"), hours.indices)
 
 
 def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "tokens") -> DataFrame:
@@ -327,7 +385,10 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
     ~rows-sized and dominate the merge shuffle. That shuffle is inherent to
     an EXACT per-second histogram on any distributed engine (the reference
     pays the same cost as one giant in-RAM table); it amortizes at 100 TB
-    where the span saturates, and every other dim stays ~10^3 rows.
+    where the span saturates, and every other dim stays ~10^3 rows. It is
+    the tail's only rows-sized exchange: ``_rank_partials`` cuts each
+    merged partition to its per-section top k in a second ``mapInArrow``
+    before anything else moves.
 
     Per batch the kernel groups nine dims by key. The hourly dim is not a
     tenth group-by over the rows: ``_hour_key_arrow`` runs on the distinct

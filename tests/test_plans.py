@@ -27,6 +27,64 @@ def plan(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def _tree(p: str) -> list[tuple[int, str, str]]:
+    """(depth, operator, node id) of each node of a formatted plan's
+    operator tree, top-down; a child is deeper than its parent."""
+    out = []
+    for ln in p.split("\n\n")[0].splitlines()[1:]:
+        m = re.match(r"^([ :+\-]*)(\w+).*\((\d+)\)$", ln)
+        if m:
+            out.append((len(m.group(1)), m.group(2), m.group(3)))
+    return out
+
+
+def _below(tree, i: int) -> list[tuple[int, str, str]]:
+    """The nodes under ``tree[i]``."""
+    j = i + 1
+    while j < len(tree) and tree[j][0] > tree[i][0]:
+        j += 1
+    return tree[i + 1 : j]
+
+
+def _above(tree, i: int) -> list[int]:
+    """The indices of the ancestors of ``tree[i]``, nearest first."""
+    out, depth = [], tree[i][0]
+    for j in range(i - 1, -1, -1):
+        if tree[j][0] < depth:
+            out.append(j)
+            depth = tree[j][0]
+    return out
+
+
+def _assert_rank_tail_shape(p: str) -> None:
+    """The fused ranking tail in the formatted plan ``p``: the local top-k
+    cut (the MapInArrow that reads ``_sk``) has exactly one Exchange of
+    partials below it, the final aggregate's ``hashpartitioning(dim_id,
+    key0, ...)``; the exact ranks are a window on (dim_id, _sk) above it; and
+    no section totals are broadcast into the ranking."""
+    tree = _tree(p)
+    cut = re.search(r"\((\d+)\) MapInArrow\nInput \[\d+\]: \[[^\]]*\b_sk#", p).group(1)
+    i = next(i for i, n in enumerate(tree) if n[1:] == ("MapInArrow", cut))
+    # the Exchanges that move partials (an upstream fan-out of the input
+    # rows is not part of the tail)
+    exchanges = [n[2] for n in _below(tree, i) if n[1] == "Exchange"
+                 and re.search(rf"\({n[2]}\) Exchange\nInput \[\d+\]: \[[^\]]*\bdim_id#", p)]
+    assert len(exchanges) == 1, exchanges
+    assert re.search(
+        rf"\({exchanges[0]}\) Exchange\nInput .*\nArguments: hashpartitioning\(dim_id#\d+, key0#\d+, ", p
+    ), p
+    above = _above(tree, i)
+    windows = [tree[j][2] for j in above if tree[j][1] == "Window"]
+    assert windows and all(
+        re.search(rf"\({w}\) Window\nInput .*\nArguments: .*\], \[dim_id#\d+, _sk#\d+\]", p)
+        for w in windows
+    ), windows
+    # the ranking's own plan: the cached relation's, or the whole plan
+    top = next((j for j in above if tree[j][1] == "InMemoryRelation"), None)
+    ranking = tree if top is None else _below(tree, top)
+    assert "BroadcastExchange" not in [n[1] for n in ranking], p
+
+
 @pytest.fixture(scope="module")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -121,8 +179,14 @@ def test_fused_report_kernel_reads_only_tokens(spark, sf_dir):
     from nginx_log_spark.reports.reports import fused_reports_arrow
 
     seq = events_with_log_columns(spark, sf_dir).select("doc_id", "tokens", "n_tok", "source")
-    nodes = re.findall(r"\(\d+\) MapInArrow\s*\nInput \[(\d+)\]: \[(\w+)#", plan(fused_reports_arrow(seq)))
-    assert nodes and all(n == ("1", "tokens") for n in nodes), nodes
+    p = plan(fused_reports_arrow(seq))
+    tree = _tree(p)
+    # the kernel is the MapInArrow over the scan; the ranking's local
+    # top-k cut is the second MapInArrow, above the aggregate
+    kernel = [n[2] for i, n in enumerate(tree) if n[1] == "MapInArrow"
+              and "MapInArrow" not in [b[1] for b in _below(tree, i)]]
+    assert len(kernel) == 1, tree
+    assert re.search(rf"\({kernel[0]}\) MapInArrow\s*\nInput \[1\]: \[tokens#", p), p
 
 
 @pytest.mark.parametrize("op", ["ngram_jaccard_pairs", "split_contamination"])
@@ -142,39 +206,33 @@ def test_shingle_explode_keeps_normalisation_above_scan(spark, docs, op):
     assert not [f for f in filters if "regexp_replace" in f], filters
 
 
-def test_rank_partials_has_no_per_dim_single_window(spark):
-    """The fused tail's heavy ranking window must partition by the hash
-    BUCKET as well as (dim, section) — a window keyed only by dim sorts the
-    whole per-second dimension in one task at scale. The section totals
-    must come from a broadcast-joined aggregate, not the big window."""
+def test_rank_partials_one_rows_sized_exchange(spark):
+    """The fused tail shuffles the rows-sized partials once, into the
+    final aggregate; a local top-k cut per partition keeps at most 2·k
+    rows per section, and only those survivors are re-partitioned, by
+    (dim, section), for the exact ranks. A window keyed only by dim would
+    sort the whole per-second dimension in one task at scale."""
     from nginx_log_spark.reports import reports as R
 
     partials = spark.createDataFrame(
         [(6, f"k{i}", 1, 10) for i in range(50)],
         "dim_id int, key0 string, cnt long, bytes long",
     )
-    p = plan(R._rank_partials(partials, 100))
-    # phase-1 window partition spec includes the pmod(xxhash64(...)) bucket
-    assert "pmod" in p and "xxhash64" in p
-    # both phase-1 windows (count and bytes order) share ONE exchange
-    assert len(re.findall(r"hashpartitioning\([^)]*_bk", p)) == 1, p
-    # section totals ride a broadcast join, not window sums over the big set
-    assert "BroadcastExchange" in p
+    _assert_rank_tail_shape(plan(R._rank_partials(partials, 100)))
 
 
-def test_bad_code_breakdown_two_phase_rank(spark, sf_dir):
+def test_bad_code_breakdown_reads_cut_ranking(spark, sf_dir):
     """The bad_code_breakdown view reads the fused tail's ranking, so it
-    has its scale shape: phase-1 ranking partitions by (status, hash-bucket
-    of request) — never a single task sorting a hot status's whole
-    aggregate — and the section totals ride a broadcast join, not the big
-    window."""
+    has its scale shape: a hot status's whole aggregate is cut per
+    partition before the exact (status) window, never sorted in one task,
+    and its subtotals are window sums of the cut's slice totals, not a
+    broadcast aggregate (the view's own 1-row totals join is not part of
+    the ranking)."""
     from nginx_log_spark.parity import parsed_log_df
     from nginx_log_spark.reports import reports as R
 
     parsed = parsed_log_df(spark, sf_dir).filter(F.col("valid"))
-    p = plan(R.all_reports(parsed, 10)["bad_code_breakdown"])
-    assert "pmod" in p and "xxhash64" in p
-    assert "BroadcastExchange" in p
+    _assert_rank_tail_shape(plan(R.all_reports(parsed, 10)["bad_code_breakdown"]))
 
 
 def test_connected_components_round_is_equi_join(spark):

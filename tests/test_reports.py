@@ -330,22 +330,14 @@ def test_cli_extension_flags(tmp_path):
     assert "== 5xx burst z-scores (extension) ==" in r.stdout
 
 
-def test_two_phase_rank_equals_single_window_semantics(spark):
-    """Randomized partials with dense count ties: the two-phase bucketed
-    top-K must reproduce the one-window reference exactly for every row
-    inside the top-k cut, and never pull an outside row under the cut."""
+def _random_partials(seed: int = 7) -> list[tuple]:
+    """Partials with dense count ties; dims 2 and 5 get enough keys that
+    the cut genuinely PRUNES (keys per partition >> K)."""
     import random
 
-    import pandas as pd
-
-    from nginx_log_spark.reports.reports import _rank_partials
-
-    rng = random.Random(7)
+    rng = random.Random(seed)
     rows = []
     for dim in range(10):
-        # dims 2 and 5 get enough keys that phase 1 genuinely PRUNES
-        # (keys/bucket >> K) — the pruning path must still yield exact
-        # ranks for both orderings on every dim
         nkeys = 0 if dim == 9 else (2500 if dim in (2, 5) else 150)
         for i in range(nkeys):
             # heavy ties: counts drawn from a tiny range
@@ -355,51 +347,168 @@ def test_two_phase_rank_equals_single_window_semantics(spark):
         for i in range(60):
             rows.append((9, f"{code}\x01req{i % 40:03d}",
                          rng.randrange(1, 4), rng.randrange(10, 13)))
-    partials = spark.createDataFrame(
-        rows, "dim_id int, key0 string, cnt long, bytes long"
-    )
-    K = 20
-    got = _rank_partials(partials, K).toPandas()
+    return rows
 
-    # pandas reference: the original single-window semantics
+
+def _reference_ranks(rows) -> dict:
+    """The one-window semantics in pandas: (dim_id, key0) -> (cnt, bytes,
+    rn, rn_bytes, section_total, section_bytes, section_keys), bytes sums
+    null only when every summand is (as Spark's sum), and null bytes last
+    in the bytes order."""
     pdf = pd.DataFrame(rows, columns=["dim_id", "key0", "cnt", "bytes"])
-    agg = pdf.groupby(["dim_id", "key0"], as_index=False).sum()
-    agg["sect"] = agg.apply(
-        lambda r: r.key0[:3] if r.dim_id == 9 else "", axis=1
+    agg = pdf.groupby(["dim_id", "key0"], as_index=False).agg(
+        cnt=("cnt", "sum"), bytes=("bytes", lambda b: b.sum(min_count=1))
     )
+    agg["sect"] = [k.split("\x01", 1)[0] if d == 9 else "" for d, k in zip(agg.dim_id, agg.key0)]
+    num = lambda v: None if pd.isna(v) else int(v)
     ref = {}
-    for (dim, sect), g in agg.groupby(["dim_id", "sect"]):
+    for _, g in agg.groupby(["dim_id", "sect"]):
         g = g.sort_values(["cnt", "key0"], ascending=[False, True]).reset_index(drop=True)
-        g["rn"] = g.index + 1
-        gb = g.sort_values(["bytes", "key0"], ascending=[False, True]).reset_index(drop=True)
+        gb = g.sort_values(["bytes", "key0"], ascending=[False, True], na_position="last")
         rnb = {k: i + 1 for i, k in enumerate(gb.key0)}
-        for _, r in g.iterrows():
-            ref[(dim, r.key0)] = (
-                int(r.cnt), int(r.bytes), int(r.rn), rnb[r.key0],
-                int(g.cnt.sum()), int(g.bytes.sum()), len(g),
+        for i, r in g.iterrows():
+            ref[(int(r.dim_id), r.key0)] = (
+                int(r.cnt), num(r.bytes), i + 1, rnb[r.key0],
+                int(g.cnt.sum()), num(g.bytes.sum(min_count=1)), len(g),
             )
-    # the hourly dim (8) is a full report: every key survives both cuts
-    kept_ref = {
-        k for k, v in ref.items()
-        if v[2] <= K or (k[0] == 3 and v[3] <= K) or k[0] == 8
-    }
+    return ref
 
+
+def _check_rank_partials(spark, rows, k: int) -> None:
+    """``_rank_partials`` must reproduce the one-window reference exactly
+    for every row inside the top-k cut, keep every hourly row, and never
+    pull an outside row under the cut."""
+    from nginx_log_spark.reports.reports import _rank_partials
+
+    partials = spark.createDataFrame(rows, "dim_id int, key0 string, cnt long, bytes long")
+    got = _rank_partials(partials, k).collect()
+    ref = _reference_ranks(rows)
+    kept_ref = {
+        key for key, v in ref.items()
+        if v[2] <= k or (key[0] == 3 and v[3] <= k) or key[0] == 8
+    }
     got_keys = set()
-    for _, r in got.iterrows():
+    for r in got:
         key0 = r.key if r.dim_id != 9 else f"{r.key}\x01{r.key2}"
-        got_keys.add((int(r.dim_id), key0))
-        cnt, byt, rn, rnb, st, sb, sk = ref[(int(r.dim_id), key0)]
-        assert (int(r.cnt), int(r.bytes)) == (cnt, byt)
-        assert (int(r.section_total), int(r.section_bytes), int(r.section_keys)) == (st, sb, sk)
-        if rn <= K:
-            assert int(r.rn) == rn
+        got_keys.add((r.dim_id, key0))
+        cnt, byt, rn, rnb, st, sb, sk = ref[(r.dim_id, key0)]
+        assert (r.cnt, r.bytes) == (cnt, byt)
+        assert (r.section_total, r.section_bytes, r.section_keys) == (st, sb, sk)
+        if rn <= k:
+            assert r.rn == rn
         else:
-            assert int(r.rn) > K  # never pulled under the cut
-        if rnb <= K:
-            assert int(r.rn_bytes) == rnb
+            assert r.rn > k  # never pulled under the cut
+        if rnb <= k:
+            assert r.rn_bytes == rnb
         else:
-            assert int(r.rn_bytes) > K
+            assert r.rn_bytes > k
     assert got_keys == kept_ref
+
+
+def test_two_phase_rank_equals_single_window_semantics(spark):
+    """Randomized partials with dense count ties: the cut-then-rank tail
+    must reproduce the one-window reference (see _check_rank_partials)."""
+    _check_rank_partials(spark, _random_partials(), 20)
+
+
+@pytest.fixture
+def cut_partitions(spark):
+    """16 shuffle partitions and no AQE coalescing, so that the final
+    aggregate's partitions, and the slices the cut ranks, are really
+    split: ``yield`` the partition count."""
+    conf = {"spark.sql.shuffle.partitions": "16",
+            "spark.sql.adaptive.coalescePartitions.enabled": "false"}
+    old = {key: spark.conf.get(key) for key in conf}
+    for key, v in conf.items():
+        spark.conf.set(key, v)
+    try:
+        yield 16
+    finally:
+        for key, v in old.items():
+            spark.conf.set(key, v)
+
+
+def test_rank_cut_per_partition(spark, cut_partitions, parsed):
+    """The local top-k cut over many partitions: a top-k that straddles
+    partitions, empty partitions, keys with null bytes (an all-null
+    section sums to null), a 4-digit status and a request holding the
+    \x01 separator, and an empty input, which yields no rows and the
+    (0, NULL, 0) header."""
+    from pyspark.sql import functions as F
+
+    from nginx_log_spark.reports.reports import _rank_partials
+
+    K = 20
+    rows = _random_partials(11) + [
+        (1, "nullbytes", 50, None),  # top by count, last by bytes
+        (1, "nullbytes", 3, 7),  # a null and a non-null partial
+        (3, "GET /n HTTP/1.1", 2, None),
+        (9, "418\x01GET /a HTTP/1.1", 4, None),  # an all-null section
+        (9, "418\x01GET /b HTTP/1.1", 1, None),
+        (9, "2000\x01GET /a\x01b HTTP/1.1", 3, 7),  # split at the FIRST \x01
+        (9, "2000\x01GET /c HTTP/1.1", 3, 9),
+    ]
+    schema = "dim_id int, key0 string, cnt long, bytes long"
+
+    def partition_of(rows):
+        agg = spark.createDataFrame(rows, schema).groupBy("dim_id", "key0").count()
+        return {(r.dim_id, r.key0): r.p for r in agg.select(
+            "dim_id", "key0", F.spark_partition_id().alias("p")).collect()}
+
+    # the global top-k of a large dim spans several partitions
+    where = partition_of(rows)
+    ref = _reference_ranks(rows)
+    top = [key for key, v in ref.items() if key[0] == 2 and v[2] <= K]
+    assert len({where[key] for key in top}) > 1
+    _check_rank_partials(spark, rows, K)
+    assert {r.key2 for r in _rank_partials(spark.createDataFrame(rows, schema), K)
+            .filter("dim = 'bad_code' AND key = '2000'").collect()} == {
+        "GET /a\x01b HTTP/1.1", "GET /c HTTP/1.1"}
+
+    # few keys over 16 partitions: most partitions are empty
+    few = [(0, "a", 1, 1), (0, "b", 2, None), (8, "2000-10-10 13", 3, 4),
+           (9, "404\x01/x", 1, 1)]
+    assert len(set(partition_of(few).values())) < cut_partitions
+    _check_rank_partials(spark, few, 1)
+
+    assert _rank_partials(spark.createDataFrame([], schema), K).count() == 0
+    totals = R.all_reports(parsed.limit(0), K)["totals"].collect()
+    assert [tuple(r) for r in totals] == [(0, None, 0)]
+
+
+def test_hour_key_arrow_equals_per_row_format():
+    """``_hour_key_arrow`` formats each distinct hour once; that must equal
+    formatting every row's UTC hour, over mixed offsets, a year boundary,
+    repeats and nulls (a null input, unparseable times)."""
+    import datetime as dt
+    import random
+
+    import pyarrow as pa
+
+    rng = random.Random(3)
+    base = dt.datetime(1999, 12, 31, 20, tzinfo=dt.timezone.utc)
+    offsets = ["+0000", "-0000", "+0100", "-0530", "+1345", "-1200"]
+    times = []
+    for _ in range(3000):
+        off = rng.choice(offsets)
+        sign = -1 if off[0] == "-" else 1
+        tz = dt.timezone(sign * dt.timedelta(hours=int(off[1:3]), minutes=int(off[3:])))
+        t = (base + dt.timedelta(seconds=rng.randrange(9 * 3600))).astimezone(tz)
+        times.append(t.strftime("%d/%b/%Y:%H:%M:%S ") + off)
+    times += [None, "garbage", "10/Oct/2000:13:55:36",
+              "10/Oct/2000:25:00:00 +0000"]
+    rng.shuffle(times)
+
+    def per_row(s):
+        try:
+            t = dt.datetime.strptime(s, "%d/%b/%Y:%H:%M:%S %z")
+        except (TypeError, ValueError):
+            return None
+        return t.astimezone(dt.timezone.utc).strftime("%Y-%m-%d %H")
+
+    got = R._hour_key_arrow(pa.chunked_array([times[:1000], times[1000:]])).to_pylist()
+    assert got == [per_row(s) for s in times]
+    assert got.count(None) == 4 and len(set(got) - {None}) == 9
 
 
 def test_cli_any_digit_status_flag(tmp_path):

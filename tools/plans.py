@@ -47,11 +47,13 @@ def main() -> None:
 
     seq = events_with_log_columns(spark, SF).select("doc_id", "tokens", "n_tok")
     sections.append((
-        "full_report_job (fused parse + 10-dim partial agg + two-phase top-K)",
-        "One mapInArrow pass emits per-partition partials only; the ranking "
-        "windows partition by (dim, section, hash-bucket) — look for "
-        "`pmod(xxhash64(...))` in the window spec and BroadcastExchange for "
-        "the section totals; no single-partition Sort over the data.",
+        "full_report_job (fused parse + 10-dim partial agg + cut-then-rank top-K)",
+        "One mapInArrow pass emits per-partition partials only; they shuffle "
+        "once, into the final aggregate (hashpartitioning(dim_id, key0)); a "
+        "second mapInArrow cuts each partition to its per-section top k and "
+        "slice totals; the exact ranks and section totals are one window on "
+        "(dim_id, _sk) over the survivors; no BroadcastExchange and no "
+        "single-partition Sort over the data.",
         plan(fused_reports_arrow(seq)),
     ))
 
