@@ -43,11 +43,10 @@ def main() -> int:
         res = run_pipeline(spark, seq, out_base=args.output, enrich=not args.no_enrich)
         res.metrics.show(truncate=False)
         if args.report:
-            from pyspark.sql import functions as F
+            from nginx_log_spark.reports.render import render_from_fused
 
-            from nginx_log_spark.reports.render import render_full_report
-
-            print(render_full_report(res.parsed.filter(F.col("valid"))))
+            # the plan all_reports cached: one fused job, shared with the views
+            print(render_from_fused(res.fused.coalesce(1).collect()))
     spark.stop()
     return 0
 

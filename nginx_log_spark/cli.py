@@ -4,8 +4,11 @@
     python -m nginx_log_spark.cli sequences.parquet   # tokenized table
     cat access.log | python -m nginx_log_spark.cli -  # stdin (like the C tool)
 
-Prints the reference-ordered report (totals, top-100 tables, bad-code
-sections) — the Spark analogue of c/main.c:485-523.
+Prints the reference-ordered report (c/main.c:485-523) and echoes the
+rejected lines to stderr in input order (c/main.c:480-483). Every input is
+ranked by one job, ``reports.fused_reports_arrow`` over its raw column;
+the echo is a valid-only parse of that column, and the full fields are
+parsed only for the ``--paths`` / ``--bursts`` extension reports.
 """
 
 from __future__ import annotations
@@ -16,6 +19,7 @@ import shutil
 import sys
 import tempfile
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -54,41 +58,23 @@ def main(argv: list[str] | None = None) -> int:
 
 
 def _report(args: argparse.Namespace, path: str) -> int:
-    from nginx_log_spark.parse import parse_lines, parse_sequences, widen_lines
-    from nginx_log_spark.reports.render import render_full_report
+    from nginx_log_spark.reports.render import render_from_fused
     from nginx_log_spark.session import get_spark
 
     spark = get_spark(app="nginx_log_spark-cli", master=args.master)
-    s3 = not args.any_digit_status
-    # pos numbers the rows in scan order (a file's own order), taken before
-    # widen_lines' round-robin repartition of a narrow scan (one small
-    # file, one .gz) shuffles them, so the echo can follow the input
-    pos = F.monotonically_increasing_id().alias("pos")
-    if path.endswith(".parquet") or _is_parquet_dir(path):
-        parsed = parse_sequences(spark.read.parquet(path).select("*", pos), status_3digit=s3)
-        echo_col = "doc_id"
-    else:
-        # widen_lines restores parse parallelism when the scan is narrow:
-        # a small file, or a non-splittable codec such as a rotated .gz
-        lines = spark.read.text(path).select(F.col("value").alias("line"), pos)
-        parsed = parse_lines(widen_lines(lines), status_3digit=s3)
-        echo_col = "line"
+    fused, rejects, valid = report_frames(spark, path, args.top, not args.any_digit_status)
 
-    # stderr echo of rejected lines in input order, c/main.c:480-483
-    # (doc_id for token input). The rejects are cached so the sort's
-    # sampling pass and its shuffle share one parse; toLocalIterator
-    # streams one sorted partition at a time, so driver memory stays
-    # bounded even when most of a huge input is rejected.
+    # the rejects are cached so the sort's sampling pass and its shuffle
+    # share one parse; toLocalIterator streams one sorted partition at a
+    # time, so driver memory stays bounded even if most lines are rejected
     if not args.no_echo:
-        rejects = parsed.filter(~F.col("valid")).select(echo_col, "pos").persist()
+        rejects = rejects.persist()
         for r in rejects.orderBy("pos").toLocalIterator():
             print(r[0], file=sys.stderr)
         rejects.unpersist()
 
-    valid = parsed.filter(F.col("valid"))
-    sys.stdout.write(
-        render_full_report(valid, k=args.top, width=args.width, color=not args.no_color)
-    )
+    # driver-sized: the fused job emits <= k rows per ranked section
+    sys.stdout.write(render_from_fused(fused.collect(), args.top, args.width, not args.no_color))
     # extension reports (off by default — the parity output above stays
     # byte-identical to the C tool, tests/test_golden_c.py)
     if args.paths or args.bursts:
@@ -102,10 +88,7 @@ def _report(args: argparse.Namespace, path: str) -> int:
             sys.stdout.write("\n== method/path (extension) ==\n")
             sys.stdout.write(pdf.to_string(index=False) + "\n")
         if args.bursts:
-            pdf = (
-                error_burst_zscore(valid)
-                .orderBy(F.desc("z")).limit(args.top).toPandas()
-            )
+            pdf = error_burst_zscore(valid).orderBy(F.desc("z")).limit(args.top).toPandas()
             sys.stdout.write("\n== 5xx burst z-scores (extension) ==\n")
             sys.stdout.write(pdf.to_string(index=False) + "\n")
     sys.stdout.flush()
@@ -113,9 +96,40 @@ def _report(args: argparse.Namespace, path: str) -> int:
     return 0
 
 
-def _is_parquet_dir(path: str) -> bool:
-    import os
+def report_frames(
+    spark: SparkSession, path: str, k: int = 100, status_3digit: bool = True
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The CLI's frames over ``path`` (a text log, or a token table in
+    parquet): the fused ranking it renders, the rejects it echoes as
+    (echo column, pos), and the valid parsed rows the extension reports
+    read. All three are lazy; each starts from the input's raw column
+    (``line``, or ``tokens`` with ``doc_id`` as the echo column)."""
+    from nginx_log_spark.parse import parse_sequences, widen_lines
+    from nginx_log_spark.reports.reports import fused_reports_arrow
 
+    # pos numbers the rows in scan order (a file's own order), taken before
+    # widen_lines' round-robin repartition of a narrow scan (one small
+    # file, one .gz) shuffles them, so the echo can follow the input
+    pos = F.monotonically_increasing_id().alias("pos")
+    if path.endswith(".parquet") or _is_parquet_dir(path):
+        src, col, echo_col = spark.read.parquet(path).select("*", pos), "tokens", "doc_id"
+    else:
+        # widen_lines restores parse parallelism when the scan is narrow:
+        # a small file, or a non-splittable codec such as a rotated .gz
+        lines = spark.read.text(path).select(F.col("value").alias("line"), pos)
+        src, col, echo_col = widen_lines(lines), "line", "line"
+
+    def parse(keep: list[str], **kw) -> DataFrame:
+        # sent only the columns the parse reads or returns
+        sent = src.select(*dict.fromkeys([col, *keep]))
+        return parse_sequences(sent, col, keep_cols=keep, status_3digit=status_3digit, **kw)
+
+    rejects = parse([echo_col, "pos"], fields=["valid"]).filter(~F.col("valid")).drop("valid")
+    return (fused_reports_arrow(src, k, col, status_3digit), rejects,
+            parse([]).filter(F.col("valid")))
+
+
+def _is_parquet_dir(path: str) -> bool:
     return os.path.isdir(path) and any(
         n.endswith(".parquet") or n == "_SUCCESS" for n in os.listdir(path)
     )

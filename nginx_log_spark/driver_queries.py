@@ -142,15 +142,17 @@ def _top_oracle(key: str, k: int = 100) -> str:
         FROM agg, tot ORDER BY cnt DESC, {key} LIMIT {k}"""
 
 
-def _report(spark, sf, name: str) -> DataFrame:
-    """One frame of reports.all_reports — the views of the fused ranking
-    that the CLI renders from, so the oracle grades the engine users run."""
-    return R.all_reports(_valid_logs(spark, sf), 100)[name]
+def _report_frames(spark, sf) -> dict[str, DataFrame]:
+    """reports.all_reports over the fused Arrow kernel on the log's token
+    column: the job the CLI and the benchmark run, so the oracle grades
+    the ranking users get."""
+    seq = parity.events_with_log_columns(spark, sf).select("tokens")
+    return R.all_reports(R.fused_reports_arrow(seq, 100), 100)
 
 
 def log_top_ips(spark, sf):
     """来访IP统计 (c/main.c:499): top-100 IPs by hits + pct."""
-    return _report(spark, sf, "top_ips")
+    return _report_frames(spark, sf)["top_ips"]
 
 
 # --- registry consolidation (round 3) ------------------------------------
@@ -179,7 +181,7 @@ def log_top_dims(spark, sf):
     per-second time histogram c/main.c:462): per dim the exact top-100 by
     (cnt desc, key asc) with pct — each branch is one all_reports view, so
     the eight branches share one fused job."""
-    frames = R.all_reports(_valid_logs(spark, sf), 100)
+    frames = _report_frames(spark, sf)
     name = {key: n for n, key in R.REPORT_KEYS.items()}
     parts = [
         frames[name[key]].select(
@@ -200,7 +202,7 @@ def log_top_dims(spark, sf):
         COUNT(DISTINCT remote_addr) AS unique_ips FROM v""",
 )
 def log_totals(spark, sf):
-    return _report(spark, sf, "totals")
+    return _report_frames(spark, sf)["totals"]
 
 
 @_register(
@@ -213,7 +215,7 @@ def log_totals(spark, sf):
 )
 def log_bytes_by_request(spark, sf):
     """HTTP流量占比统计: weighted agg (c/main.c:468)."""
-    return _report(spark, sf, "bytes_by_request")
+    return _report_frames(spark, sf)["bytes_by_request"]
 
 
 @_register(
@@ -232,7 +234,7 @@ def log_bytes_by_request(spark, sf):
 )
 def log_bad_code_breakdown(spark, sf):
     """Per-bad-code request breakdown (c/main.c:469-477, 323-360)."""
-    return _report(spark, sf, "bad_code_breakdown")
+    return _report_frames(spark, sf)["bad_code_breakdown"]
 
 
 @_register(
@@ -244,7 +246,7 @@ def log_bad_code_breakdown(spark, sf):
 )
 def log_hourly_traffic(spark, sf):
     """North-star hourly rollup: the fused hourly dim, every UTC hour."""
-    h = _report(spark, sf, "hourly_traffic")
+    h = _report_frames(spark, sf)["hourly_traffic"]
     return h.select(
         F.date_format("hour", "yyyy-MM-dd HH").alias("hour"), "hits", "bytes"
     )

@@ -41,20 +41,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def shingles_expr(text_col: str, k: int) -> Column:
-    """Distinct character k-shingles of the normalized text (native SQL).
-
-    NB: only reference PRE-PROJECTED columns here — an inline
-    regexp_replace inside the transform lambda would be recomputed per
-    array element (O(len^2) regex work). Use with_shingles() instead when
-    building plans."""
-    norm = f"regexp_replace(lower(trim({text_col})), '\\\\s+', ' ')"
-    return F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({norm}) - {k} + 1, 1)), "
-        f"i -> substring({norm}, i, {k})))"
-    )
-
-
 def with_shingles(df: DataFrame, text_col: str, k: int, out_col: str = "_sh") -> DataFrame:
     """Project normalized text ONCE, then shingle it — the lambda references
     the materialized column, so the normalization regex runs once per row,

@@ -121,8 +121,6 @@ def _exact_parse_line_ext(s: str, status_3digit: bool = True) -> tuple | None:
 
 def _tokens_to_binary(tok: pa.Array) -> pa.BinaryArray:
     """list<int32> of byte values -> BinaryArray, zero-copy offsets."""
-    if isinstance(tok, pa.ChunkedArray):
-        tok = tok.combine_chunks()
     offs = tok.offsets.to_numpy()  # int32, len+1 (physical)
     vals = tok.values.to_numpy()
     lo, hi = int(offs[0]), int(offs[-1])
@@ -136,6 +134,17 @@ def _tokens_to_binary(tok: pa.Array) -> pa.BinaryArray:
         len(tok),
         [None, pa.py_buffer(rel), pa.py_buffer(payload)],
     )
+
+
+def _as_binary_lines(col: pa.Array) -> pa.BinaryArray:
+    """The raw lines of an input column: a ``list<int32>`` token column
+    through ``_tokens_to_binary``, a string or binary line column by a
+    cast to binary (no copy of the bytes, no UTF-8 check)."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    if pa.types.is_list(col.type):
+        return _tokens_to_binary(col)
+    return pc.cast(col, pa.binary())
 
 
 def _uncapture(pattern: str, keep: set[str]) -> str:
@@ -305,21 +314,11 @@ def _parse_binary_lines(
     return out
 
 
-def _out_arrow_fields(extended: bool) -> list[tuple[str, pa.DataType]]:
-    f = [(name, pa.string()) for name, _ in PARSED_FIELDS[:9]]
-    f[5] = ("body_bytes_sent", pa.int64())
-    if extended:
-        f += [(name, pa.string()) for name in EXT_FIELD_NAMES]
-    f.append(("valid", pa.bool_()))
-    return f
-
-
-def _out_ddl(df: DataFrame, out_fields) -> str:
-    spark_fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
-    return spark_fields + ", " + ", ".join(
-        f"{n} {'bigint' if t == pa.int64() else ('boolean' if t == pa.bool_() else 'string')}"
-        for n, t in out_fields
-    )
+def _out_fields(extended: bool) -> list[tuple[str, str]]:
+    """(name, Spark type) of the parsed columns: PARSED_FIELDS, with the
+    extended tail before ``valid``."""
+    f = [(n, t.simpleString()) for n, t in PARSED_FIELDS]
+    return f[:-1] + [(n, "string") for n in EXT_FIELD_NAMES if extended] + f[-1:]
 
 
 def parse_sequences_arrow(
@@ -332,6 +331,10 @@ def parse_sequences_arrow(
 ) -> DataFrame:
     """(doc_id, tokens, n_tok, source, ...) -> same + 9 fields + valid
     (+ the 9 nullable extended-tail fields with extended=True).
+
+    ``tokens_col`` is the raw input: a ``list<int32>`` token column, or a
+    string or binary line column such as ``spark.read.text``'s
+    (``_as_binary_lines``), so one op parses both.
 
     mapInArrow: the token bytes never materialize as Python objects on the
     hot path; the input columns (including the token arrays — per-row
@@ -350,18 +353,15 @@ def parse_sequences_arrow(
     echo; None = all (the default, schema-compatible with round-1
     callers).
     """
-    out_fields = _out_arrow_fields(extended)
+    out_fields = _out_fields(extended)
     if fields is not None:
         missing = set(fields) - {n for n, _ in out_fields}
         if missing:
             raise ValueError(f"unknown parsed fields: {sorted(missing)}")
         out_fields = [(n, t) for n, t in out_fields if n in set(fields)]
     keep = list(df.columns) if keep_cols is None else list(keep_cols)
-    out_ddl = _out_ddl(df.select(*keep), out_fields) if keep else ", ".join(
-        f"{n} {'bigint' if t == pa.int64() else ('boolean' if t == pa.bool_() else 'string')}"
-        for n, t in out_fields
-    )
-    tok_name = tokens_col
+    out_ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}" for f in df.select(*keep).schema]
+                        + [f"{n} {t}" for n, t in out_fields])
     # kernel-level projection pushdown: only the emitted parsed fields are
     # captured by the strict regex (validity semantics unchanged — see
     # _parse_binary_lines); None (all fields requested) keeps full capture
@@ -371,8 +371,7 @@ def parse_sequences_arrow(
 
     def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            tok = b.column(b.schema.get_field_index(tok_name))
-            lines = _tokens_to_binary(tok)
+            lines = _as_binary_lines(b.column(b.schema.get_field_index(tokens_col)))
             parsed = _parse_binary_lines(lines, extended, status_3digit, needed)
             arrays = [b.column(b.schema.get_field_index(k)) for k in keep]
             arrays += [parsed[n] for n, _ in out_fields]
@@ -387,21 +386,7 @@ def parse_lines_arrow(
     status_3digit: bool = True,
 ) -> DataFrame:
     """Raw string-line variant (for spark.read.text inputs)."""
-    out_fields = _out_arrow_fields(extended)
-    out_ddl = _out_ddl(df, out_fields)
-
-    def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            col = b.column(b.schema.get_field_index(line_col))
-            if isinstance(col, pa.ChunkedArray):
-                col = col.combine_chunks()
-            lines = pc.cast(col, pa.binary())
-            parsed = _parse_binary_lines(lines, extended, status_3digit)
-            arrays = list(b.columns) + [parsed[n] for n, _ in out_fields]
-            names = list(b.schema.names) + [n for n, _ in out_fields]
-            yield pa.RecordBatch.from_arrays(arrays, names)
-
-    return df.mapInArrow(op, out_ddl)
+    return parse_sequences_arrow(df, line_col, extended, status_3digit=status_3digit)
 
 
 def parse_tier_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -413,13 +398,10 @@ def parse_tier_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     this when a parse workload is unexpectedly slow: a high
     n_fallback_ok + n_reject share IS the explanation, visible instead of
     silent (VERDICT r1 'what's wrong' #6)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
 
     def op(batches):
         for b in batches:
-            tok = b.column(b.schema.get_field_index(tokens_col))
-            lines = _tokens_to_binary(tok)
+            lines = _as_binary_lines(b.column(b.schema.get_field_index(tokens_col)))
             # boolean strict-match kernel: same match set as extract_regex
             # (nulls there == non-matches here), 6.6x cheaper — this op
             # only counts tiers, it never reads a submatch

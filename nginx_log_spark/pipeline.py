@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from nginx_log_spark.checkpoint import partition_metrics
 from nginx_log_spark.enrich import default_cidr_table, enrich_geoip, enrich_ua
 from nginx_log_spark.parse import parse_sequences
-from nginx_log_spark.reports.reports import all_reports
+from nginx_log_spark.reports.reports import all_reports, fused_reports
 from nginx_log_spark.route import fan_out_write, split_rejects, with_status_class
 
 
@@ -25,6 +25,7 @@ class PipelineResult:
     parsed: DataFrame
     accepted: DataFrame
     rejects: DataFrame
+    fused: DataFrame | None = None
     reports: dict[str, DataFrame] = field(default_factory=dict)
     sinks: dict[str, str] = field(default_factory=dict)
     metrics: DataFrame | None = None
@@ -45,7 +46,9 @@ def run_pipeline(
     if enrich:
         accepted = enrich_ua(enrich_geoip(accepted, default_cidr_table(), spark=spark))
     res = PipelineResult(parsed=parsed, accepted=accepted, rejects=rejects)
-    res.reports = all_reports(accepted.filter(F.col("valid")))
+    # the views' cache is fused.coalesce(1): render from that, not a new job
+    res.fused = fused_reports(parsed.filter(F.col("valid")))
+    res.reports = all_reports(res.fused)
     res.metrics = partition_metrics(parsed)
     if out_base:
         res.sinks = fan_out_write(parsed, out_base)

@@ -8,11 +8,13 @@ coverage footer. Verified against the COMPILED C binary in
 tests/test_golden_c.py (byte-equal modulo within-table tie order — the
 reference's qsort is unstable, c/hash.c:173-200).
 
-Engine side: ONE fused Spark job (reports.fused_reports /
-fused_reports_arrow) supplies every table, the distinct-key counts
-(section_keys) and the header totals (section_total/section_bytes) in a
-single collect — the renderer itself is pure driver-side string work over
-<= a few thousand rows.
+Engine side: ONE fused Spark job supplies every table, the distinct-key
+counts (section_keys) and the header totals (section_total/section_bytes)
+in a single collect; ``render_from_fused`` is pure driver-side string work
+over those <= a few thousand rows. From raw input (tokens, or text lines
+as the CLI reads them) that job is ``reports.fused_reports_arrow``
+(``render_report_from_sequences``); from a parsed frame it is
+``reports.fused_reports`` (see the ``reports`` module docstring).
 
 printf parity notes:
 - percentages are computed HERE from the raw integers with the exact C
@@ -190,18 +192,6 @@ def render_from_fused(
             rows[0]["section_total"], total_lines, rows[0]["section_keys"], w, c, k,
         )
     return "".join(out)
-
-
-def render_full_report(
-    parsed: DataFrame, k: int = 100, width: int | None = None, color: bool = True
-) -> str:
-    """Render the report off a PARSED (valid-only) DataFrame: one fused
-    Spark job (reports.fused_reports — one scan, one shuffle), one collect."""
-    from nginx_log_spark.reports.reports import fused_reports
-
-    # driver-sized by construction: fused_reports emits only report rows —
-    # a handful of totals plus <= k rows per ranked section (k default 100)
-    return render_from_fused(fused_reports(parsed, k).collect(), k, width, color)
 
 
 def render_report_from_sequences(

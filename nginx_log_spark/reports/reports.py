@@ -2,12 +2,22 @@
 
 The reference fills about ten hash tables in one pass (c/main.c:460-477)
 and prints top-K tables from them (c/main.c:246-360). Here one fused job
-does the same: ``fused_reports`` (over parsed rows) or
-``fused_reports_arrow`` (parse + partial aggregation in one Arrow pass
-over the token table) emits (dim, key) partials, and ``_rank_partials``
-merges and ranks them. ``all_reports`` derives every report frame from
-that one result, so the CLI, the pipeline and the graded ``log_*``
-queries read the same engine.
+does the same. Two front ends emit (dim, key) partials, and one tail,
+``_rank_partials``, merges and ranks them:
+
+- ``fused_reports_arrow`` reads a RAW column (``list<int32>`` tokens or
+  text lines) and parses and partially aggregates each Arrow batch in one
+  ``mapInArrow`` pass. The CLI (text, stdin and .parquet input), the
+  graded ``log_*`` report queries and the benchmark rank through it.
+- ``fused_reports`` reads an already PARSED frame and explodes it in the
+  JVM. ``run_pipeline`` uses it over the parse it persists anyway.
+
+So a raw column takes the Arrow kernel and a parsed frame the JVM front
+end. On ``local[4]``, 100k perfbench zipf lines: from text the kernel took
+1.10 s against 1.84 s for ``parse_lines`` (nine utf8 fields shipped back
+to the JVM) + ``fused_reports``; over a persisted parsed frame
+``fused_reports`` took 0.74 s against 0.96 s for parsing again in the
+kernel. ``all_reports(fused, k)`` derives every report frame from either.
 
 Scale notes (100 TB):
 - the only rows-sized shuffle carries map-side-aggregated (dim, key)
@@ -57,8 +67,10 @@ _TIME_FMT = "dd/MMM/yyyy:HH:mm:ss Z"
 
 
 def time_local_to_ts(col):
-    """'10/Oct/2000:13:55:36 +0000' -> timestamp (null if unparseable)."""
-    return F.to_timestamp(col, _TIME_FMT)
+    """'10/Oct/2000:13:55:36 +0000' -> timestamp, null if the string is not
+    a calendar time (``try_``: under ANSI mode ``to_timestamp`` would fail
+    the job on a valid line with, say, 31/Feb)."""
+    return F.try_to_timestamp(col, F.lit(_TIME_FMT))
 
 
 def error_burst_zscore(
@@ -332,7 +344,8 @@ def _top_k_cut(k: int):
     return op
 
 
-# canonical combined-format time: 'dd/Mon/yyyy:HH:mm:ss +ZZZZ'
+# canonical combined-format time: 'dd/Mon/yyyy:HH:mm:ss +ZZZZ' (four
+# captures: RE2's one-pass matcher takes at most 4, see arrow_parser)
 _TIME_RE = (
     r"^(?P<dt>[0-9]{2}/[A-Za-z]{3}/[0-9]{4}:[0-9]{2}:[0-9]{2}:[0-9]{2})"
     r" (?P<sign>[+-])(?P<oh>[0-9]{2})(?P<om>[0-9]{2})$"
@@ -340,9 +353,11 @@ _TIME_RE = (
 
 
 def _hour_key_arrow(tl):
-    """time_local utf8 array -> 'yyyy-MM-dd HH' UTC hour key (null if the
-    string isn't a canonical offset time) — the vectorized twin of the JVM
-    to_timestamp + date_trunc hourly dim."""
+    """time_local utf8 array -> 'yyyy-MM-dd HH' UTC hour key, null where
+    ``time_local_to_ts`` is null — the vectorized twin of the JVM hourly
+    dim. Arrow's strptime rolls 31/Feb and seconds 60-61 over, so a parse
+    whose day or second is not the string's is dropped, as is an offset
+    the JVM rejects (minutes above 59, beyond ±18:00)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -353,30 +368,36 @@ def _hour_key_arrow(tl):
     ok = pc.is_valid(res)
     null_s = pa.scalar(None, pa.string())
     fld = lambda n: pc.if_else(ok, res.field(n), null_s)
-    dt = pc.strptime(fld("dt"), format="%d/%b/%Y:%H:%M:%S", unit="s",
-                     error_is_null=True)
-    off = pc.add(
-        pc.multiply(pc.cast(fld("oh"), pa.int64()), 3600),
-        pc.multiply(pc.cast(fld("om"), pa.int64()), 60),
+    num = lambda a: pc.cast(a, pa.int64())
+    dts = fld("dt")  # fixed width: day at [0, 2), second at [18, 20)
+    dt = pc.strptime(dts, format="%d/%b/%Y:%H:%M:%S", unit="s", error_is_null=True)
+    oh, om = num(fld("oh")), num(fld("om"))
+    off_min = pc.add(pc.multiply(oh, 60), om)
+    real = pc.and_(
+        pc.and_(pc.equal(pc.day(dt), num(pc.utf8_slice_codeunits(dts, 0, 2))),
+                pc.equal(pc.second(dt), num(pc.utf8_slice_codeunits(dts, 18, 20)))),
+        pc.and_(pc.less_equal(om, 59), pc.less_equal(off_min, 18 * 60)),
     )
-    off = pc.if_else(pc.equal(fld("sign"), "-"), pc.negate(off), off)
+    off = pc.multiply(off_min, 60)
+    off = pc.if_else(pc.equal(res.field("sign"), "-"), pc.negate(off), off)
     utc = pc.cast(pc.subtract(pc.cast(dt, pa.int64()), off), pa.timestamp("s"))
+    utc = pc.if_else(real, utc, pa.scalar(None, pa.timestamp("s")))
     # format each distinct hour once: a batch spans few hours, many seconds
     hours = pc.dictionary_encode(pc.floor_temporal(utc, unit="hour"))
     return pc.take(pc.strftime(hours.dictionary, format="%Y-%m-%d %H"), hours.indices)
 
 
-def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "tokens") -> DataFrame:
+def fused_reports_arrow(
+    seq: DataFrame, k: int = TOP_K, tokens_col: str = "tokens", status_3digit: bool = True
+) -> DataFrame:
     """parse + per-partition partial aggregation fused into ONE mapInArrow
     pass — the literal Spark analogue of the reference's per-line
     multi-aggregate loop (c/main.c:407-478).
 
-    Why not parse-then-aggregate: shipping every parsed field (and the
-    token arrays) from the Python workers back to the JVM costs far more
-    than the parse itself (~10-15us/row/core measured), and the 10-way JVM
-    explode anti-scales under allocation pressure. Here the Python op
-    consumes the batch, aggregates per (dim, key) with pyarrow's C++ hash
-    group-by, and emits one partial table per input partition.
+    The Python op parses each batch, aggregates per (dim, key) with
+    pyarrow's C++ hash group-by and emits one partial table per input
+    partition, so no parsed field crosses back to the JVM (the module
+    docstring has the measured reason).
 
     Partial-size honesty (measured round 2): nine of the ten dims compress
     ~100x in the partial agg, but the per-SECOND time dim (the reference's
@@ -398,14 +419,13 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
     it parses about 1,200 strings instead of 62.5k. Only ``tokens_col``
     is sent to the kernel: each column it is sent costs Arrow IPC per row.
 
-    Input: the raw sequences table. Output: identical to fused_reports.
+    Input: a raw column ``tokens_col``, ``list<int32>`` tokens or text
+    lines (``_as_binary_lines``). Output: identical to fused_reports over
+    the valid rows of ``parse_sequences(seq, tokens_col, status_3digit=...)``.
     """
     import pyarrow as pa
 
-    from nginx_log_spark.parse.arrow_parser import (
-        _parse_binary_lines,
-        _tokens_to_binary,
-    )
+    from nginx_log_spark.parse.arrow_parser import _as_binary_lines, _parse_binary_lines
 
     def op(batches):
         import pyarrow.compute as pc
@@ -420,7 +440,7 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
             }))
 
         for b in batches:
-            parsed = _parse_binary_lines(_tokens_to_binary(b.column(0)))
+            parsed = _parse_binary_lines(_as_binary_lines(b.column(0)), status_3digit=status_3digit)
             valid = parsed["valid"]
             body = pc.if_else(valid, parsed["body_bytes_sent"], pa.scalar(None, pa.int64()))
             # _FUSED_DIMS order; the hourly dim 8 comes from dim 6's partial
@@ -472,14 +492,16 @@ def fused_reports_arrow(seq: DataFrame, k: int = TOP_K, tokens_col: str = "token
     return _rank_partials(partials, k)
 
 
-def all_reports(parsed: DataFrame, k: int = TOP_K) -> dict[str, DataFrame]:
-    """The full report set as views of ONE ``fused_reports(parsed, k)``.
+def all_reports(fused: DataFrame, k: int = TOP_K) -> dict[str, DataFrame]:
+    """The full report set as views of one fused result, ``fused``: the
+    output of ``fused_reports_arrow`` over a raw column or of
+    ``fused_reports`` over valid parsed rows (see the module docstring),
+    ranked with at least this ``k``.
 
-    ``parsed`` is the valid-only parsed DataFrame. The fused result is
-    persisted lazily: the first view collected runs the fused job and the
-    other views read its cached rows (a later call over the same plan
-    reuses them too — Spark's cache matches plans). Frames, columns and
-    row order:
+    ``fused.coalesce(1)`` is persisted lazily: the first view collected
+    runs the fused job and the other views read its cached rows (so does
+    a later ``fused.coalesce(1)`` — Spark's cache matches plans). Frames,
+    columns and row order:
 
     - ``totals``: one row (total_lines, total_bytes_sent, unique_ips), from
       the top_ips section totals; (0, NULL, 0) on empty input
@@ -495,7 +517,7 @@ def all_reports(parsed: DataFrame, k: int = TOP_K) -> dict[str, DataFrame]:
     """
     # one partition: the result is small, and a single-partition cache
     # lets the sorted views sort in place instead of range-shuffling
-    f = fused_reports(parsed, k).coalesce(1).persist()
+    f = fused.coalesce(1).persist()
     dim = lambda name: f.filter(F.col("dim") == name)
     pct = lambda num, den: F.round(F.col(num) / F.col(den) * 100.0, 2)
     # a ranked row counts at least one line: line counts are non-null

@@ -146,12 +146,14 @@ def golden_run(c_binary, tmp_path_factory, spark):
     from pyspark.sql import functions as F
 
     from nginx_log_spark.parse import parse_lines
-    from nginx_log_spark.reports.render import render_full_report
+    from nginx_log_spark.reports.render import render_from_fused
+    from nginx_log_spark.reports.reports import fused_reports
 
     parsed = parse_lines(
         spark.read.text(str(log)).withColumnRenamed("value", "line")
     ).cache()
-    ours = render_full_report(parsed.filter(F.col("valid")), k=100, width=WIDTH)
+    fused = fused_reports(parsed.filter(F.col("valid")), 100).collect()
+    ours = render_from_fused(fused, k=100, width=WIDTH)
     rejects = [r[0] for r in parsed.filter(~F.col("valid")).select("line").collect()]
     parsed.unpersist()
     return c_out, c_err, ours, rejects
@@ -212,10 +214,12 @@ def test_c_binary_empty_key_fragmentation(c_binary, tmp_path, spark):
     from pyspark.sql import functions as F
 
     from nginx_log_spark.parse import parse_lines
-    from nginx_log_spark.reports.render import render_full_report
+    from nginx_log_spark.reports.render import render_from_fused
+    from nginx_log_spark.reports.reports import fused_reports
 
     parsed = parse_lines(spark.read.text(str(log)).withColumnRenamed("value", "line"))
-    ours = render_full_report(parsed.filter(F.col("valid")), k=100, width=WIDTH)
+    ours = render_from_fused(fused_reports(parsed.filter(F.col("valid")), 100).collect(),
+                             k=100, width=WIDTH)
 
     # totals identical
     assert c_text.split("\n")[:4] == ours.split("\n")[:4]

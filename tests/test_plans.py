@@ -5,6 +5,7 @@ Each test pins one claim from SURVEY.md §4 / BENCH.md:
   - filters and projections reach the parquet scan (pushdown + pruning)
   - dimension joins broadcast (no fact-side shuffle)
   - the report frames are views of one cached fused ranking
+  - the CLI and the graded report queries rank through the Arrow kernel
   - candidate-pair joins are equi-joins (never a nested-loop / cartesian)
   - the packing prefix-sum's only single-partition exchange is the tiny
     bucket-totals frame, and the data shuffles exactly once
@@ -109,7 +110,8 @@ def test_top_counts_plans_take_ordered(spark, sf_dir):
     from nginx_log_spark.parity import parsed_log_df
     from nginx_log_spark.reports import reports as R
 
-    frames = R.all_reports(parsed_log_df(spark, sf_dir).filter(F.col("valid")))
+    parsed = parsed_log_df(spark, sf_dir).filter(F.col("valid"))
+    frames = R.all_reports(R.fused_reports(parsed))
     assert "TakeOrderedAndProject" in plan(frames["top_ips"])
     for name, df in frames.items():
         p = plan(df)
@@ -118,6 +120,59 @@ def test_top_counts_plans_take_ordered(spark, sf_dir):
         view = p.split("InMemoryRelation")[0]
         for op in ("MapInArrow", "Generate", "Window"):
             assert op not in view, (name, op)
+
+
+def _assert_one_kernel(p: str, raw_col: str) -> None:
+    """The fused report in the formatted plan ``p`` runs through the Arrow
+    kernel: two mapInArrow ops, the kernel, sent only the raw column
+    ``raw_col`` and returning the partials, and the ranking's cut; no JVM
+    explode. Ops are told apart by their expression ids, as a materialized
+    cache prints its initial and its final plan."""
+    ops = dict(re.findall(r"\) MapInArrow\s*\nInput \[\d+\]: \[.*\]\nArguments: (op\(.*?\)#\d+), \[(.*?)\]", p))
+    assert len(ops) == 2, ops
+    kernel = [op for op, out in ops.items() if out.startswith("dim_id#") and "_sk" not in out]
+    assert len(kernel) == 1 and re.fullmatch(rf"op\({raw_col}#\d+\)#\d+", kernel[0]), ops
+    assert "Generate" not in p
+
+
+@pytest.fixture(scope="module")
+def cli_inputs(tmp_path_factory):
+    """A one-line text log and the same line as a token table."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("cli_inputs")
+    line = b'10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /a HTTP/1.1" 200 10 "-" "u" "-"'
+    (d / "a.log").write_bytes(line + b"\n")
+    pq.write_table(pa.table({"doc_id": ["d0"], "tokens": pa.array([list(line)], pa.list_(pa.int32())),
+                             "n_tok": pa.array([len(line)], pa.int32())}), d / "seq.parquet")
+    return str(d / "a.log"), str(d / "seq.parquet")
+
+
+def test_cli_and_graded_report_take_one_kernel(spark, sf_dir, cli_inputs):
+    """The CLI's report frame over a text log and the graded log_top_dims
+    (views of one cached fused result) rank through the same Arrow kernel
+    as the benchmark, never the JVM front end's explode."""
+    from nginx_log_spark import cli
+    from nginx_log_spark.driver_queries import log_top_dims
+
+    fused, _, _ = cli.report_frames(spark, cli_inputs[0])
+    _assert_one_kernel(plan(fused), "line")
+    _assert_one_kernel(plan(log_top_dims(spark, sf_dir)), "tokens")
+
+
+def test_cli_echo_parse_reads_echo_column_and_pos(spark, cli_inputs):
+    """The CLI's reject echo is a valid-only parse sent only the raw
+    column, the echo column and pos: for text the line is both."""
+    from nginx_log_spark import cli
+
+    for path, sent in zip(cli_inputs, (r"line#\d+, pos#\d+L", r"tokens#\d+, doc_id#\d+, pos#\d+L")):
+        _, rejects, _ = cli.report_frames(spark, path)
+        p = plan(rejects)
+        assert len(re.findall(r"\(\d+\) MapInArrow\n", p)) == 1, p
+        assert re.search(rf"\) MapInArrow\nInput \[\d\]: \[{sent}\]\n", p), p
+        # the valid-only op returns the echo column, pos and valid
+        assert re.search(r"\) MapInArrow\nInput .*\nArguments: op\(.*\)#\d+, \[\w+#\d+, pos#\d+L, valid#\d+\]", p), p
 
 
 def test_geoip_enrich_is_broadcast_equi_join(spark, sf_dir):
@@ -232,7 +287,7 @@ def test_bad_code_breakdown_reads_cut_ranking(spark, sf_dir):
     from nginx_log_spark.reports import reports as R
 
     parsed = parsed_log_df(spark, sf_dir).filter(F.col("valid"))
-    _assert_rank_tail_shape(plan(R.all_reports(parsed, 10)["bad_code_breakdown"]))
+    _assert_rank_tail_shape(plan(R.all_reports(R.fused_reports(parsed, 10), 10)["bad_code_breakdown"]))
 
 
 def test_connected_components_round_is_equi_join(spark):

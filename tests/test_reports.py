@@ -29,7 +29,7 @@ def parsed(spark):
 
 @pytest.fixture(scope="module")
 def frames(parsed):
-    return R.all_reports(parsed, 100)
+    return R.all_reports(R.fused_reports(parsed, 100), 100)
 
 
 @pytest.fixture(scope="module")
@@ -114,7 +114,7 @@ def test_bad_code_sections(frames, gold):
 
 def test_all_reports_empty_input(parsed):
     """No rows: one (0, NULL, 0) header row, every other frame empty."""
-    frames = R.all_reports(parsed.limit(0), 100)
+    frames = R.all_reports(R.fused_reports(parsed.limit(0), 100), 100)
     assert [tuple(r) for r in frames["totals"].collect()] == [(0, None, 0)]
     for name, df in frames.items():
         if name != "totals":
@@ -138,14 +138,14 @@ def test_hourly_traffic(frames, gold):
 
 
 def test_render_report_smoke(parsed):
-    from nginx_log_spark.reports.render import byte_format, render_full_report
+    from nginx_log_spark.reports.render import byte_format, render_from_fused
 
     assert byte_format(0) == "0 B"
     assert byte_format(1023) == "1023 B"
     assert byte_format(1024) == "1.00 KB"
     assert byte_format(1536) == "1.50 KB"
     assert byte_format(5 * 1024**3) == "5.00 GB"
-    text = render_full_report(parsed, k=5)
+    text = render_from_fused(R.fused_reports(parsed, 5).collect(), k=5)
     assert "来访IP统计" in text and "HTTP流量占比统计" in text and "状态码" in text
 
 
@@ -187,7 +187,7 @@ def test_fused_hourly_mixed_offsets(spark):
             {r["key"]: r["cnt"] for r in fused_df.filter(F.col("dim") == "hourly").collect()}
             for fused_df in (R.fused_reports(parsed, k), R.fused_reports_arrow(seq, k))
         ]
-        view = R.all_reports(parsed, k)["hourly_traffic"].collect()
+        view = R.all_reports(R.fused_reports(parsed, k), k)["hourly_traffic"].collect()
         got.append({r["hour"].strftime("%Y-%m-%d %H"): r["hits"] for r in view})
         return got
 
@@ -303,6 +303,41 @@ def test_arrow_hourly_dim_equals_per_row_hour_keys(spark):
             assert got == exp, batch_rows
     finally:
         spark.conf.set(key, old)
+
+
+def test_non_calendar_times_drop_from_both_front_ends(spark):
+    """Valid lines whose times are not calendar times (31/Feb, hour 25, a
+    bad month, second 60, an offset beyond ±18:00) neither fail the JVM
+    front end nor ``error_burst_zscore`` under ANSI mode, and both front
+    ends drop them from the hourly dim, so their fused rows are equal."""
+    from pyspark.sql import functions as F
+
+    from nginx_log_spark.parse.parser import encode_lines
+
+    good = ["10/Oct/2000:13:55:36 +0000", "10/oct/2000:12:25:36 -0130", "29/Feb/2000:10:00:00 +0000"]
+    bad = ["31/Feb/2000:10:00:00 +0000", "10/Oct/2000:25:00:00 +0000", "10/Foo/2000:13:55:36 +0000",
+           "29/Feb/2001:10:00:00 +0000", "10/Oct/2000:13:59:60 +0000", "10/Oct/2000:13:55:36 +1801"]
+    lines = [
+        (f"d{i}", f'10.0.0.{i} - - [{t}] "GET /{i} HTTP/1.1" {500 if i % 2 else 200} {i} "" "u" ""')
+        for i, t in enumerate(good + bad)
+    ]
+    seq = spark.createDataFrame(lines, "doc_id string, line string").select(
+        "doc_id", encode_lines(F.col("line")).alias("tokens"))
+    parsed = parse_sequences(seq).filter(F.col("valid"))
+    cols = ["dim", "key", "key2", "cnt", "bytes", "section_total", "section_bytes",
+            "section_keys", "rn", "rn_bytes"]
+    rows = lambda df: sorted(tuple(r[c] for c in cols) for r in df.collect())
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        jvm = rows(R.fused_reports(parsed, 100))
+        assert jvm == rows(R.fused_reports_arrow(seq, 100))
+        R.error_burst_zscore(parsed, min_history=0).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
+    assert sum(1 for r in jvm if r[0] == "top_ips") == len(good + bad)
+    assert {r[1]: r[3] for r in jvm if r[0] == "hourly"} == {
+        "2000-10-10 13": 2, "2000-02-29 10": 1}
 
 
 def test_cli_extension_flags(tmp_path):
@@ -472,7 +507,7 @@ def test_rank_cut_per_partition(spark, cut_partitions, parsed):
     _check_rank_partials(spark, few, 1)
 
     assert _rank_partials(spark.createDataFrame([], schema), K).count() == 0
-    totals = R.all_reports(parsed.limit(0), K)["totals"].collect()
+    totals = R.all_reports(R.fused_reports(parsed.limit(0), K), K)["totals"].collect()
     assert [tuple(r) for r in totals] == [(0, None, 0)]
 
 
@@ -511,56 +546,100 @@ def test_hour_key_arrow_equals_per_row_format():
     assert got.count(None) == 4 and len(set(got) - {None}) == 9
 
 
-def test_cli_any_digit_status_flag(tmp_path):
+def _mixed_log(tmp_path):
+    """A log of strict, multi-space (fallback tier), malformed, non-UTF-8
+    and 4-digit-status lines: (path, lines)."""
+    lines = [
+        b'10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /\xff HTTP/1.1" 404 10 "-" "u" "-"',
+        b'10.0.0.2 - - [10/Oct/2000:13:55:37 +0000] "GET /b HTTP/1.1" 2000 10 "-" "u" "-"',
+        b'10.0.0.3  -  - [10/Oct/2000:13:55:38 +0000]  "GET /c HTTP/1.1"  503  30 "-" "u" "-"',
+    ] + [
+        b"malformed %03d" % i if i % 3 == 0 else
+        b'10.0.0.%d - - [10/Oct/2000:13:55:%02d +0000] "GET /b HTTP/1.1" 200 20 "-" "u" "-"'
+        % (i % 5 + 4, i)
+        for i in range(1, 40)
+    ]
+    log = tmp_path / "mixed.log"
+    log.write_bytes(b"\n".join(lines) + b"\n")
+    return log, lines
+
+
+def _cli_reference(spark, log, status_3digit: bool) -> tuple[bytes, list[bytes]]:
+    """What the CLI must print for ``log`` with ``--width 60 --no-color``:
+    the report of the JVM front end over ``parse_lines``, and the rejected
+    lines by the scalar two-tier parser, in file order."""
+    from pyspark.sql import functions as F
+
+    from nginx_log_spark.parse import parse_lines
+    from nginx_log_spark.parse.arrow_parser import parse_line_py
+    from nginx_log_spark.reports.render import render_from_fused
+
+    lines = spark.read.text(str(log)).withColumnRenamed("value", "line")
+    parsed = parse_lines(lines, status_3digit=status_3digit).filter(F.col("valid"))
+    text = render_from_fused(R.fused_reports(parsed).collect(), 100, 60, False)
+    rejects = [ln for ln in log.read_bytes().split(b"\n")[:-1]
+               if parse_line_py(ln.decode("latin-1"), status_3digit) is None]
+    return text.encode(), rejects
+
+
+def _echoed(stderr: bytes, inputs) -> list[bytes]:
+    """The echo in a CLI's stderr: its lines that are input lines (the
+    rest is Spark's logging)."""
+    inputs = set(inputs)
+    return [ln for ln in stderr.split(b"\n") if ln in inputs]
+
+
+def test_cli_any_digit_status_flag(tmp_path, spark):
     """--any-digit-status selects the Nim/C++ parse semantics end to end:
     a 4-digit status line is rejected by default (C gate) but counted with
-    the flag."""
+    the flag. In both modes the report equals the JVM front end's over
+    parse_lines, and the echo is the rejected lines in file order."""
     import subprocess
     import sys
 
-    lines = [
-        '10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /a HTTP/1.1" 200 10 "-" "u" "-"',
-        '10.0.0.2 - - [10/Oct/2000:13:55:37 +0000] "GET /b HTTP/1.1" 2000 10 "-" "u" "-"',
-    ]
-    log = tmp_path / "s.log"
-    log.write_text("\n".join(lines) + "\n")
+    log, lines = _mixed_log(tmp_path)
     base = [sys.executable, "-m", "nginx_log_spark.cli", str(log),
-            "--no-color", "--no-echo", "--master", "local[2]"]
-    strict = subprocess.run(base, capture_output=True, text=True, timeout=300)
+            "--no-color", "--width", "60", "--master", "local[2]"]
+    strict = subprocess.run(base, capture_output=True, timeout=300)
     assert strict.returncode == 0, strict.stderr[-1500:]
-    loose = subprocess.run(base + ["--any-digit-status"],
-                           capture_output=True, text=True, timeout=300)
+    loose = subprocess.run(base + ["--any-digit-status"], capture_output=True, timeout=300)
     assert loose.returncode == 0, loose.stderr[-1500:]
-    # the C-semantics run counts 1 valid line, the Nim-semantics run 2
-    assert "10.0.0.2" not in strict.stdout
-    assert "10.0.0.2" in loose.stdout and "2000" in loose.stdout
+    for run, status_3digit in ((strict, True), (loose, False)):
+        text, rejects = _cli_reference(spark, log, status_3digit)
+        assert run.stdout == text
+        assert _echoed(run.stderr, lines) == rejects
+    # the C-semantics run counts the 4-digit line as a reject, the
+    # Nim-semantics run counts it
+    assert b"10.0.0.2" not in strict.stdout and lines[1] in _echoed(strict.stderr, lines)
+    assert b"10.0.0.2" in loose.stdout and b"2000" in loose.stdout
+    assert lines[1] not in _echoed(loose.stderr, lines)
+    assert b"10.0.0.3" in strict.stdout  # the fallback tier's line
 
 
-def test_cli_stdin_matches_path(tmp_path):
+def test_cli_stdin_matches_path(tmp_path, spark):
     """`-` spools stdin byte-exactly: a log with a non-UTF-8 byte piped in
     prints the same report as the same file passed by path, and the spool
     file is removed at exit. The stderr echo lists the rejected lines in
     file order (c/main.c:480-483), although a file this small scans as one
-    partition that is then repartitioned round-robin for the parse."""
+    partition that is then repartitioned round-robin for the parse. The
+    same lines as a token table print the same report, and echo the
+    rejects' doc_id in input order."""
     import os
     import subprocess
     import sys
 
-    lines = [
-        b'10.0.0.1 - - [10/Oct/2000:13:55:36 +0000] "GET /\xff HTTP/1.1" 404 10 "-" "u" "-"',
-    ] + [
-        b"malformed %03d" % i if i % 3 == 0 else
-        b'10.0.0.%d - - [10/Oct/2000:13:55:%02d +0000] "GET /b HTTP/1.1" 200 20 "-" "u" "-"'
-        % (i % 5 + 2, i)
-        for i in range(1, 40)
-    ]
-    log = tmp_path / "ff.log"
-    log.write_bytes(b"\n".join(lines) + b"\n")
-    base = [sys.executable, "-m", "nginx_log_spark.cli", "--no-color", "--master", "local[2]"]
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    log, lines = _mixed_log(tmp_path)
+    text, rejects = _cli_reference(spark, log, True)
+    base = [sys.executable, "-m", "nginx_log_spark.cli", "--no-color", "--width", "60",
+            "--master", "local[2]"]
     by_path = subprocess.run(base + [str(log)], capture_output=True, timeout=300)
     assert by_path.returncode == 0, by_path.stderr[-1500:]
-    echoed = [ln for ln in by_path.stderr.split(b"\n") if ln.startswith(b"malformed")]
-    assert echoed == [ln for ln in lines if ln.startswith(b"malformed")]
+    assert by_path.stdout == text
+    assert _echoed(by_path.stderr, lines) == rejects
+    assert any(ln.startswith(b"malformed") for ln in rejects)
     spool = tmp_path / "spool"
     spool.mkdir()
     piped = subprocess.run(base + ["--no-echo", "-"], input=log.read_bytes(), capture_output=True,
@@ -570,3 +649,12 @@ def test_cli_stdin_matches_path(tmp_path):
     assert piped.stdout == by_path.stdout
     assert b"10.0.0.1" in piped.stdout
     assert not list(spool.glob("*.log"))
+
+    doc_ids = [f"doc{i:03d}".encode() for i in range(len(lines))]
+    tokens = pa.array([list(ln) for ln in lines], pa.list_(pa.int32()))
+    pq.write_table(pa.table({"doc_id": [d.decode() for d in doc_ids], "tokens": tokens}),
+                   tmp_path / "seq.parquet")
+    tok = subprocess.run(base + [str(tmp_path / "seq.parquet")], capture_output=True, timeout=300)
+    assert tok.returncode == 0, tok.stderr[-1500:]
+    assert tok.stdout == by_path.stdout
+    assert _echoed(tok.stderr, doc_ids) == [d for d, ln in zip(doc_ids, lines) if ln in rejects]
