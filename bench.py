@@ -74,7 +74,7 @@ def _group_queries(spark, group: str) -> dict:
             # manual projection pushdown (Catalyst cannot prune through
             # mapInArrow), so only the verdict crosses back from Python
             "parse_lines": lambda: parse_sequences(
-                seq.select("tokens"), fields=["valid"], keep_cols=[]
+                seq, fields=["valid"], keep_cols=[]
             ).filter(F.col("valid")).count(),
             # every field plus the token passthrough shipped to the JVM: the
             # transfer-bound cost a consumer pays only when it needs them all
@@ -94,9 +94,7 @@ def _group_queries(spark, group: str) -> dict:
         def enrich():
             # the geo/UA rollup reads two parsed columns: ship only those
             parsed = parse_sequences(
-                seq.select("tokens"),
-                fields=["remote_addr", "http_user_agent", "valid"],
-                keep_cols=[],
+                seq, fields=["remote_addr", "http_user_agent", "valid"], keep_cols=[]
             ).filter(F.col("valid"))
             df = enrich_ua(enrich_geoip(parsed, default_cidr_table(), spark=spark))
             df.groupBy("country", "ua_class").count().collect()

@@ -119,14 +119,10 @@ def report_frames(
         lines = spark.read.text(path).select(F.col("value").alias("line"), pos)
         src, col, echo_col = widen_lines(lines), "line", "line"
 
-    def parse(keep: list[str], **kw) -> DataFrame:
-        # sent only the columns the parse reads or returns
-        sent = src.select(*dict.fromkeys([col, *keep]))
-        return parse_sequences(sent, col, keep_cols=keep, status_3digit=status_3digit, **kw)
-
-    rejects = parse([echo_col, "pos"], fields=["valid"]).filter(~F.col("valid")).drop("valid")
-    return (fused_reports_arrow(src, k, col, status_3digit), rejects,
-            parse([]).filter(F.col("valid")))
+    rejects = parse_sequences(src, col, fields=["valid"], keep_cols=[echo_col, "pos"],
+                              status_3digit=status_3digit).filter(~F.col("valid")).drop("valid")
+    valid = parse_sequences(src, col, keep_cols=[], status_3digit=status_3digit)
+    return fused_reports_arrow(src, k, col, status_3digit), rejects, valid.filter(F.col("valid"))
 
 
 def _is_parquet_dir(path: str) -> bool:

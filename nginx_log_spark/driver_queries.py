@@ -469,10 +469,7 @@ def log_parse_tier_stats(spark, sf):
     both engines embed RE2, so the strict-tier split is directly checkable."""
     from nginx_log_spark.parse import parse_tier_stats
 
-    seq = parity.events_with_log_columns(spark, sf).select(
-        "doc_id", "tokens", "n_tok", "source"
-    )
-    return parse_tier_stats(seq)
+    return parse_tier_stats(parity.events_with_log_columns(spark, sf))
 
 
 _SKEW_O = f"""{_V},

@@ -1,6 +1,8 @@
 """Vectorized Arrow-native parser — the engine's hot path.
 
-Two-tier design (exactly the reference's semantics):
+Two-tier design (exactly the reference's semantics), decided once per row:
+each parse reports its ``tier`` (0 strict, 1 fallback, 2 reject), and
+``valid`` is ``tier < 2``.
 
 - STRICT tier (C++/RE2, ``pyarrow.compute.extract_regex``): the canonical
   combined format with single spaces. Works on BINARY arrays built
@@ -17,13 +19,15 @@ Two-tier design (exactly the reference's semantics):
   separators, malformed lines, trailing junk — goes through the
   atomic-group regex of parser.py, which is byte-parity with the C
   combinators on ALL inputs (800k-case fuzz). Merged back via
-  ``pc.replace_with_mask``.
+  ``pc.replace_with_mask``; a line it rejects is tier 2.
 
 Why RE2 can't do the whole job: RE2 reproduces backtracking *semantics*
 (leftmost-first), but C-parity requires the NON-backtracking terminator
 consumption of ``parse_item_trim_space`` (c/main.c:47-90) — expressible
 only with atomic groups, which RE2 lacks. The strict shape has no
 ambiguity, so the tiers agree on their overlap.
+
+``parse_tier_stats`` is an aggregate of the per-row ``tier``.
 """
 
 from __future__ import annotations
@@ -52,26 +56,6 @@ STRICT_PATTERN = (
     r' "(?P<http_user_agent>[^"]*)"'
     r' "(?P<http_x_forwarded_for>[^"]*)"$'
 )
-
-
-# Nim/C++ reference variants accept ANY digit run as the status
-# (main.nim:102-103, c++/main.cpp:154-157); the C tool insists on exactly
-# 3 digits (c/main.c:433-437). C semantics are canonical (BASELINE.json);
-# status_3digit=False selects the Nim/C++ behavior.
-ANYDIGIT_STATUS_PATTERN = STRICT_PATTERN.replace(
-    "(?P<status>[0-9]{3})", "(?P<status>[0-9]+)"
-)
-
-
-def _exact_parse_line(s: str, status_3digit: bool = True) -> tuple | None:
-    """EXACT tier: the atomic-group regex (byte-parity with c/main.c)."""
-    m = _CORE_RE.match(s)
-    if not m:
-        return None
-    g = m.groups()
-    if status_3digit and len(g[4]) != 3:
-        return None
-    return g
 
 
 # ---------------------------------------------------------------------------
@@ -105,16 +89,35 @@ STRICT_EXT_PATTERN = STRICT_PATTERN[:-1] + (  # strip the trailing $
 )
 
 
-def _exact_parse_line_ext(s: str, status_3digit: bool = True) -> tuple | None:
-    """Core fields + extended tail via the C-semantics combinators."""
-    from nginx_log_spark.parse import oracle
+def _strict_pattern(extended: bool = False, status_3digit: bool = True) -> str:
+    """The STRICT tier's regex, with the extended tail if ``extended``.
 
+    The C tool insists on a 3-digit status (c/main.c:433-437), the
+    canonical semantics (BASELINE.json); ``status_3digit=False`` accepts
+    any digit run like the Nim/C++ reference variants (main.nim:102-103,
+    c++/main.cpp:154-157)."""
+    pattern = STRICT_EXT_PATTERN if extended else STRICT_PATTERN
+    if status_3digit:
+        return pattern
+    return pattern.replace("(?P<status>[0-9]{3})", "(?P<status>[0-9]+)")
+
+
+def _exact_parse_line(
+    s: str, status_3digit: bool = True, extended: bool = False
+) -> tuple | None:
+    """EXACT tier: the atomic-group regex (byte-parity with c/main.c) —
+    the 9 core fields, plus with ``extended`` the 9 tail fields replayed by
+    the C-semantics combinators from the core parser's end cursor."""
     m = _CORE_RE.match(s)
     if not m:
         return None
     g = m.groups()
-    if status_3digit and len(g[4]) != 3:
+    if status_3digit and len(g[4]) != 3:  # c/main.c:433-437
         return None
+    if not extended:
+        return g
+    from nginx_log_spark.parse import oracle
+
     tail = oracle.parse_extended_tail(s, m.end())
     return g + tuple(tail[n] for n in oracle.EXT_FIELDS)
 
@@ -204,68 +207,58 @@ def _split_tail(tail: pa.Array, names: list[str]) -> dict[str, pa.Array]:
     return out
 
 
+def _exact_tier(
+    lines: pa.BinaryArray, strict: pa.BooleanArray, status_3digit: bool, extended: bool
+) -> tuple[np.ndarray, np.ndarray, list]:
+    """The EXACT tier over the rows the STRICT tier missed (``strict`` is
+    false or null there; a null line is a miss): the per-row tier (0
+    strict, 1 fallback, 2 reject), the miss mask, and the misses' parse
+    tuples in row order (None for a reject)."""
+    miss = ~pc.fill_null(strict, False).to_numpy(zero_copy_only=False)
+    idx = np.nonzero(miss)[0]
+    fb = [
+        _exact_parse_line(raw.decode("latin-1"), status_3digit, extended)
+        if raw is not None else None
+        for raw in pc.take(lines, pa.array(idx)).to_pylist()
+    ]
+    tier = np.where(miss, np.int8(2), np.int8(0))
+    tier[idx[np.array([g is not None for g in fb], dtype=bool)]] = 1
+    return tier, miss, fb
+
+
 def _parse_binary_lines(
     lines: pa.BinaryArray,
     extended: bool = False,
     status_3digit: bool = True,
     needed: list[str] | None = None,
 ) -> dict[str, pa.Array]:
-    """BinaryArray of raw lines -> {field: Array} + 'valid' (the full
-    two-tier parse). Field arrays are utf8 (latin-1 transcoding for any
-    non-UTF8 bytes, matching ``parser.decode_tokens``).
+    """BinaryArray of raw lines -> {field: Array} + 'tier' (int8: 0 strict,
+    1 fallback, 2 reject) + 'valid' (``tier < 2``). Field arrays are utf8
+    (latin-1 transcoding for any non-UTF8 bytes, matching
+    ``parser.decode_tokens``).
 
     ``needed``: projection pushdown INTO the kernel (None = all fields).
-    Validity is always computed with the identical two-tier rule. An
-    empty ``needed`` (valid-only consumers, e.g. a count) runs the boolean
+    The tier is always decided by the identical two-tier rule. An empty
+    ``needed`` (valid-only consumers, e.g. a count) runs the boolean
     ``match_substring_regex`` kernel, measured 6.6x faster than 9-group
     extraction on the same batch; any other core subset takes the one
     four-capture extraction (``_one_pass_pattern``) and splits the tail
     only when it needs a tail field. The extended mode demotes the
     unrequested groups (``_uncapture``)."""
-    names = FIELD_NAMES + (EXT_FIELD_NAMES if extended else [])
-    if needed is not None:
-        names = [n for n in names if n in set(needed)]
-    pattern = STRICT_EXT_PATTERN if extended else STRICT_PATTERN
-    if not status_3digit:
-        pattern = pattern.replace("(?P<status>[0-9]{3})", "(?P<status>[0-9]+)")
-    _fb = _exact_parse_line_ext if extended else _exact_parse_line
-    fallback = lambda s: _fb(s, status_3digit)  # noqa: E731
-    # positions of the kept fields in the fallback tuple (core 9 + ext 9)
     all_names = FIELD_NAMES + (EXT_FIELD_NAMES if extended else [])
-    fb_pos = [all_names.index(n) for n in names]
+    names = all_names if needed is None else [n for n in all_names if n in set(needed)]
+    pattern = _strict_pattern(extended, status_3digit)
 
+    fields: dict[str, pa.Array] = {}
     if not names:
-        # valid-only: boolean strict match (same match set as extraction —
-        # null-result rows of extract_regex are exactly the non-matching
-        # rows), Python fallback still decides validity for the misses
-        matched = pc.match_substring_regex(lines, pattern=pattern)
-        miss = pc.invert(matched)
-        n_miss = pc.sum(miss).as_py() or 0
-        valid = matched
-        if n_miss:
-            miss_np = miss.to_numpy(zero_copy_only=False)
-            idx = np.nonzero(miss_np)[0]
-            fb_lines = pc.take(lines, pa.array(idx)).to_pylist()
-            fb_valid = [
-                raw is not None and fallback(raw.decode("latin-1")) is not None
-                for raw in fb_lines
-            ]
-            valid = pc.replace_with_mask(valid, pa.array(miss_np), pa.array(fb_valid))
-        return {"valid": valid}
-
-    if extended:
+        # valid-only: boolean strict match (same match set as extraction:
+        # null-result rows of extract_regex are exactly the non-matching rows)
+        strict = pc.match_substring_regex(lines, pattern=pattern)
+    elif extended:
         if len(names) < len(all_names):
             pattern = _uncapture(pattern, set(names))
         res = pc.extract_regex(lines, pattern=pattern)
-        fields: dict[str, pa.Array] = {name: res.field(name) for name in names}
-    else:
-        res = pc.extract_regex(lines, pattern=_one_pass_pattern(pattern))
-        fields = {name: res.field(name) for name in names if name in FIELD_NAMES[:3]}
-        fields.update(_split_tail(res.field("tail"), names))
-    miss = pc.is_null(res)
-    n_miss = pc.sum(miss).as_py() or 0
-
-    if extended:
+        fields = {name: res.field(name) for name in names}
         # RE2 reports non-participating optional groups as '' — but every
         # extended-tail run is >=1 char, so '' unambiguously means absent
         empty = pa.scalar(b"", pa.binary())
@@ -275,26 +268,20 @@ def _parse_binary_lines(
                 fields[name] = pc.if_else(
                     pc.equal(fields[name], empty), absent, fields[name]
                 )
-    valid = pc.invert(miss)
+        strict = pc.is_valid(res)
+    else:
+        res = pc.extract_regex(lines, pattern=_one_pass_pattern(pattern))
+        fields = {name: res.field(name) for name in names if name in FIELD_NAMES[:3]}
+        fields.update(_split_tail(res.field("tail"), names))
+        strict = pc.is_valid(res)
+    tier, miss, fb = _exact_tier(lines, strict, status_3digit, extended)
 
-    if n_miss:
-        miss_np = miss.to_numpy(zero_copy_only=False)
-        idx = np.nonzero(miss_np)[0]
-        fb_lines = pc.take(lines, pa.array(idx)).to_pylist()
-        fb_cols: dict[str, list] = {name: [] for name in names}
-        fb_valid = []
-        for raw in fb_lines:
-            g = fallback(raw.decode("latin-1")) if raw is not None else None
-            fb_valid.append(g is not None)
-            for j, name in zip(fb_pos, names):
-                v = g[j] if g is not None else None
-                fb_cols[name].append(v.encode("latin-1") if v is not None else None)
-        mask = pa.array(miss_np)
+    if fb:
+        mask = pa.array(miss)
         for name in names:
-            fields[name] = pc.replace_with_mask(
-                fields[name], mask, pa.array(fb_cols[name], type=pa.binary())
-            )
-        valid = pc.replace_with_mask(valid, mask, pa.array(fb_valid))
+            j = all_names.index(name)
+            vals = [None if g is None or g[j] is None else g[j].encode("latin-1") for g in fb]
+            fields[name] = pc.replace_with_mask(fields[name], mask, pa.array(vals, pa.binary()))
 
     out: dict[str, pa.Array] = {}
     for name in names:
@@ -310,7 +297,8 @@ def _parse_binary_lines(
                 [b.decode("latin-1") if b is not None else None for b in col.to_pylist()],
                 type=pa.string(),
             )
-    out["valid"] = valid
+    out["tier"] = pa.array(tier)
+    out["valid"] = pa.array(tier < 2)
     return out
 
 
@@ -330,7 +318,8 @@ def parse_sequences_arrow(
     status_3digit: bool = True,
 ) -> DataFrame:
     """(doc_id, tokens, n_tok, source, ...) -> same + 9 fields + valid
-    (+ the 9 nullable extended-tail fields with extended=True).
+    (+ the 9 nullable extended-tail fields with extended=True; + the int8
+    ``tier`` only when ``fields`` names it).
 
     ``tokens_col`` is the raw input: a ``list<int32>`` token column, or a
     string or binary line column such as ``spark.read.text``'s
@@ -346,27 +335,31 @@ def parse_sequences_arrow(
     parsed utf8 columns PLUS the ~700 B/row token arrays echoed back to
     the JVM — measured 3-4x the parse kernel's own cost at 8M rows.
     ``fields`` selects which parsed columns to emit AND is pushed into
-    the kernel itself (round 6): validity is always decided by the full
-    two-tier rule; valid-only consumers run the boolean match kernel
-    (6.6x cheaper), other field sets skip the tail split when they need
-    no tail field. ``keep_cols`` selects which input columns to
-    echo; None = all (the default, schema-compatible with round-1
-    callers).
+    the kernel itself (round 6): the tier is always decided by the full
+    two-tier rule; valid-only (and tier-only) consumers run the boolean
+    match kernel (6.6x cheaper), other field sets skip the tail split
+    when they need no tail field. ``keep_cols`` selects which input
+    columns to echo, and the op is sent only those and ``tokens_col``;
+    None = all (the default, schema-compatible with round-1 callers).
     """
     out_fields = _out_fields(extended)
     if fields is not None:
-        missing = set(fields) - {n for n, _ in out_fields}
+        known = out_fields + [("tier", "tinyint")]
+        missing = set(fields) - {n for n, _ in known}
         if missing:
             raise ValueError(f"unknown parsed fields: {sorted(missing)}")
-        out_fields = [(n, t) for n, t in out_fields if n in set(fields)]
+        out_fields = [(n, t) for n, t in known if n in set(fields)]
     keep = list(df.columns) if keep_cols is None else list(keep_cols)
+    if keep_cols is not None:
+        # each column sent to the op costs Arrow IPC per row
+        df = df.select(*dict.fromkeys([tokens_col, *keep]))
     out_ddl = ", ".join([f"{f.name} {f.dataType.simpleString()}" for f in df.select(*keep).schema]
                         + [f"{n} {t}" for n, t in out_fields])
     # kernel-level projection pushdown: only the emitted parsed fields are
-    # captured by the strict regex (validity semantics unchanged — see
+    # captured by the strict regex (tier semantics unchanged — see
     # _parse_binary_lines); None (all fields requested) keeps full capture
     needed = (
-        None if fields is None else [n for n, _ in out_fields if n != "valid"]
+        None if fields is None else [n for n, _ in out_fields if n not in ("tier", "valid")]
     )
 
     def op(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -390,7 +383,9 @@ def parse_lines_arrow(
 
 
 def parse_tier_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
-    """Tier telemetry: one row (n_rows, n_strict, n_fallback_ok, n_reject).
+    """Tier telemetry: one row (n_rows, n_strict, n_fallback_ok, n_reject),
+    the parser's per-row ``tier`` counted over a tier-only parse of
+    ``tokens_col``.
 
     The EXACT tier is per-row Python, bounded to ~1% of rows on canonical
     logs — but an input shape that defeats the RE2 strict tier (multi-space
@@ -398,44 +393,14 @@ def parse_tier_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     this when a parse workload is unexpectedly slow: a high
     n_fallback_ok + n_reject share IS the explanation, visible instead of
     silent (VERDICT r1 'what's wrong' #6)."""
-
-    def op(batches):
-        for b in batches:
-            lines = _as_binary_lines(b.column(b.schema.get_field_index(tokens_col)))
-            # boolean strict-match kernel: same match set as extract_regex
-            # (nulls there == non-matches here), 6.6x cheaper — this op
-            # only counts tiers, it never reads a submatch
-            miss = pc.invert(
-                pc.match_substring_regex(lines, pattern=STRICT_PATTERN)
-            )
-            n = len(lines)
-            n_miss = pc.sum(miss).as_py() or 0
-            n_fb_ok = 0
-            if n_miss:
-                idx = np.nonzero(miss.to_numpy(zero_copy_only=False))[0]
-                for raw in pc.take(lines, pa.array(idx)).to_pylist():
-                    if raw is not None and _exact_parse_line(raw.decode("latin-1")):
-                        n_fb_ok += 1
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array([n], pa.int64()),
-                    pa.array([n - n_miss], pa.int64()),
-                    pa.array([n_fb_ok], pa.int64()),
-                    pa.array([n_miss - n_fb_ok], pa.int64()),
-                ],
-                ["n_rows", "n_strict", "n_fallback_ok", "n_reject"],
-            )
-
     from pyspark.sql import functions as F
 
-    per_part = df.mapInArrow(
-        op, "n_rows long, n_strict long, n_fallback_ok long, n_reject long"
-    )
-    return per_part.agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.sum("n_strict").alias("n_strict"),
-        F.sum("n_fallback_ok").alias("n_fallback_ok"),
-        F.sum("n_reject").alias("n_reject"),
+    tier = F.col("tier")
+    return parse_sequences_arrow(df, tokens_col, fields=["tier"], keep_cols=[]).agg(
+        F.count("*").alias("n_rows"),
+        F.count_if(tier == 0).alias("n_strict"),
+        F.count_if(tier == 1).alias("n_fallback_ok"),
+        F.count_if(tier == 2).alias("n_reject"),
     )
 
 
@@ -480,8 +445,7 @@ def parse_line_py(s: str, status_3digit: bool = True) -> dict | None:
     """Single-line reference implementation of the two-tier logic (tests)."""
     import re
 
-    pattern = STRICT_PATTERN if status_3digit else ANYDIGIT_STATUS_PATTERN
-    m = re.match(pattern, s)
+    m = re.match(_strict_pattern(status_3digit=status_3digit), s)
     if m:
         d = m.groupdict()
         d["body_bytes_sent"] = int(d["body_bytes_sent"])

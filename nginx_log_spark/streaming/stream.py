@@ -9,8 +9,8 @@ is the same parse -> route -> aggregate with watermarked event-time windows:
 - stream_fan_out: foreachBatch routing to the same per-sink layout as batch
   (exactly-once per micro-batch via the idempotent partitioned write).
 
-The parse UDF and report expressions are THE SAME objects as batch — one
-code path, two execution modes.
+The parse op (a ``mapInArrow``) and report expressions are THE SAME
+objects as batch — one code path, two execution modes.
 """
 
 from __future__ import annotations

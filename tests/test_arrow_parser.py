@@ -2,12 +2,14 @@
 
 Tier contract: STRICT (RE2) ∪ EXACT (atomic-group regex) == oracle on every
 input. The scalar fuzz proves tier agreement; the batch tests prove the
-vectorized zero-copy plumbing (offsets math, fallback merge, casts).
+vectorized zero-copy plumbing (offsets math, fallback merge, casts) and the
+per-row ``tier`` each parse reports.
 """
 
 from __future__ import annotations
 
 import random
+import re
 
 import numpy as np
 import pyarrow as pa
@@ -17,7 +19,9 @@ from nginx_log_spark.datagen import loggen
 from nginx_log_spark.parse import oracle
 from nginx_log_spark.parse.arrow_parser import (
     FIELD_NAMES,
+    _exact_parse_line,
     _parse_binary_lines,
+    _strict_pattern,
     _tokens_to_binary,
     parse_line_py,
 )
@@ -29,6 +33,21 @@ def _norm(d):
     return None if d is None else {k: d[k] for k in sorted(d)}
 
 
+def _assert_tiers(lines: list[str]) -> None:
+    """Each line's batch ``tier`` is its scalar classification, in both
+    status modes: 0 if the strict pattern matches, 1 if the exact tier
+    accepts, 2 otherwise."""
+    binary = pa.array([s.encode("latin-1") for s in lines], type=pa.binary())
+    for status_3digit in (True, False):
+        strict = re.compile(_strict_pattern(status_3digit=status_3digit))
+        got = _parse_binary_lines(binary, status_3digit=status_3digit)["tier"].to_pylist()
+        exp = [0 if strict.match(s) else 1 if _exact_parse_line(s, status_3digit) else 2
+               for s in lines]
+        bad = [(s, g, e) for s, g, e in zip(lines, got, exp) if g != e]
+        assert not bad, (status_3digit, bad[:3])
+        assert set(exp) == {0, 1, 2}
+
+
 def test_two_tier_scalar_fuzz_matches_oracle():
     rnd = random.Random(12)
     alphabet = '0123456789abcf.:- []"GETPOSu/\\xyz'
@@ -36,6 +55,7 @@ def test_two_tier_scalar_fuzz_matches_oracle():
         '1.2.3.4 - - [10/Oct/2000:13:55:36 -0700] "GET /a HTTP/1.1" 200 2326 '
         '"http://r/" "Mozilla (X11; Linux)" "-"'
     )
+    lines = []
     for _ in range(30000):
         s = base
         for _ in range(rnd.randint(0, 4)):
@@ -48,6 +68,8 @@ def test_two_tier_scalar_fuzz_matches_oracle():
             else:
                 s = s[:p] + rnd.choice(alphabet) + s[p:]
         assert _norm(parse_line_py(s)) == _norm(oracle.parse_line(s)), repr(s)
+        lines.append(s)
+    _assert_tiers(lines)
 
 
 def test_two_tier_full_byte_range_fuzz_matches_oracle():
@@ -128,17 +150,19 @@ def test_full_byte_range_batch_matches_scalar():
 
 @pytest.mark.parametrize("status_3digit", [True, False])
 def test_needed_subsets_equal_full_parse(status_3digit):
-    """Any subset of the core fields parses to the same columns (and the
-    same validity) as the full parse."""
+    """Any subset of the core fields, the valid-only one (``needed=[]``)
+    included, parses to the same columns (and the same tier and validity)
+    as the full parse."""
     rnd = random.Random(5)
     lines = _mutated(rnd, _SPLIT_BYTES, 1500)
     binary = pa.array([s.encode("latin-1") for s in lines], type=pa.binary())
     full = _parse_binary_lines(binary, status_3digit=status_3digit)
-    for size in range(1, 9):
+    assert set(full["tier"].to_pylist()) == {0, 1, 2}
+    for size in range(0, 9):
         for _ in range(3):
             needed = rnd.sample(FIELD_NAMES, size)
             out = _parse_binary_lines(binary, status_3digit=status_3digit, needed=needed)
-            assert sorted(out) == sorted(needed + ["valid"])
+            assert sorted(out) == sorted(needed + ["tier", "valid"])
             for name in out:
                 assert out[name].equals(full[name]), (needed, name)
 
@@ -147,8 +171,6 @@ def test_strict_tier_is_subset_of_oracle_accepts():
     """Every STRICT match must be oracle-accepted with identical values
     (the load-bearing property: RE2 can't emulate the exact parser, so the
     strict shape must be unambiguous)."""
-    import re
-
     from nginx_log_spark.parse.arrow_parser import FIELD_NAMES, STRICT_PATTERN
 
     strict = re.compile(STRICT_PATTERN)
@@ -220,8 +242,6 @@ def test_parse_lines_arrow(spark):
 def test_parse_tier_stats(spark):
     """Telemetry: strict/fallback/reject counts match the golden fixture
     (the non-strict share must be visible, not silently 50x slower)."""
-    import re
-
     from nginx_log_spark.parse import parse_tier_stats
     from nginx_log_spark.parse.arrow_parser import STRICT_PATTERN
 
@@ -253,11 +273,7 @@ EXT_TAIL = " srv-1.example.com 512 1024 10.8.3.1:8080 502 0.123 0.100 0.010 0.05
 
 
 def test_extended_strict_and_fallback_match_oracle():
-    from nginx_log_spark.parse.arrow_parser import (
-        EXT_FIELD_NAMES,
-        _exact_parse_line_ext,
-        _parse_binary_lines,
-    )
+    from nginx_log_spark.parse.arrow_parser import EXT_FIELD_NAMES
 
     base = '1.2.3.4 - - [10/Oct/2000:13:55:36 +0000] "GET /a HTTP/1.1" 200 5 "r" "ua" "x"'
     cases = [
@@ -270,7 +286,7 @@ def test_extended_strict_and_fallback_match_oracle():
     arr = pa.array([c.encode() for c in cases], type=pa.binary())
     out = _parse_binary_lines(arr, extended=True)
     for i, line in enumerate(cases):
-        exp = _exact_parse_line_ext(line)
+        exp = _exact_parse_line(line, extended=True)
         assert out["valid"].to_pylist()[i] == (exp is not None), line
         for j, name in enumerate(EXT_FIELD_NAMES, start=9):
             assert out[name].to_pylist()[i] == exp[j], (line, name)
@@ -280,13 +296,7 @@ def test_extended_strict_and_fallback_match_oracle():
 
 def test_extended_fuzz_strict_subset():
     """Any STRICT_EXT match must equal the combinator parse (tail tier)."""
-    import re
-
-    from nginx_log_spark.parse.arrow_parser import (
-        EXT_FIELD_NAMES,
-        STRICT_EXT_PATTERN,
-        _exact_parse_line_ext,
-    )
+    from nginx_log_spark.parse.arrow_parser import EXT_FIELD_NAMES, STRICT_EXT_PATTERN
 
     strict = re.compile(STRICT_EXT_PATTERN)
     rnd = random.Random(21)
@@ -308,7 +318,7 @@ def test_extended_fuzz_strict_subset():
         if not m:
             continue
         n_checked += 1
-        exp = _exact_parse_line_ext(s)
+        exp = _exact_parse_line(s, extended=True)
         assert exp is not None, s
         for j, name in enumerate(EXT_FIELD_NAMES, start=9):
             assert m.group(name) == exp[j], (s, name)
@@ -344,7 +354,7 @@ def test_parse_fields_pruning_parity(spark, sf_dir):
     )
     assert pruned.columns == ["doc_id", "status", "valid"]
     assert sorted(map(tuple, full.collect())) == sorted(map(tuple, pruned.collect()))
-    only_valid = parse_sequences(seq.select("tokens"), fields=["valid"], keep_cols=[])
+    only_valid = parse_sequences(seq, fields=["valid"], keep_cols=[])
     assert only_valid.columns == ["valid"]
     assert only_valid.filter("valid").count() == full.filter("valid").count()
 
@@ -401,17 +411,12 @@ def test_anydigit_mode_tier_agreement_fuzz():
     and the combinator fallback must still agree everywhere they overlap —
     a strict match is always a valid exact parse with identical fields, and
     lines the strict tier misses get the exact tier's verdict (any digit
-    run accepted). 30k mutations with digit-run statuses of length 1..6."""
+    run accepted). 30k mutations with digit-run statuses of length 1..6;
+    their batch tiers are checked in both status modes."""
     rnd = random.Random(7331)
     alphabet = '0123456789abcf.:- []"GETPOSu/xyz'
-    import re
-
-    from nginx_log_spark.parse.arrow_parser import (
-        ANYDIGIT_STATUS_PATTERN,
-        _exact_parse_line,
-        FIELD_NAMES,
-    )
-
+    strict = re.compile(_strict_pattern(status_3digit=False))
+    lines = []
     for _ in range(30000):
         status = "5" * rnd.randint(1, 6)
         s = (
@@ -427,7 +432,7 @@ def test_anydigit_mode_tier_agreement_fuzz():
                 s = s[:p] + s[p + 1 :]
             else:
                 s = s[:p] + rnd.choice(alphabet) + s[p:]
-        m = re.match(ANYDIGIT_STATUS_PATTERN, s)
+        m = strict.match(s)
         g = _exact_parse_line(s, status_3digit=False)
         if m:
             # strict tier accepts => exact tier must accept with the SAME fields
@@ -435,3 +440,5 @@ def test_anydigit_mode_tier_agreement_fuzz():
             assert dict(zip(FIELD_NAMES, g)) == m.groupdict(), repr(s)
         # (strict-miss lines are decided by the exact tier alone — that is
         # the tier contract; no cross-check needed beyond the accept case)
+        lines.append(s)
+    _assert_tiers(lines)

@@ -6,6 +6,8 @@ Each test pins one claim from SURVEY.md §4 / BENCH.md:
   - dimension joins broadcast (no fact-side shuffle)
   - the report frames are views of one cached fused ranking
   - the CLI and the graded report queries rank through the Arrow kernel
+  - the parse op is sent only the columns it reads, and the tier counts
+    are an aggregate of the one parse
   - candidate-pair joins are equi-joins (never a nested-loop / cartesian)
   - the packing prefix-sum's only single-partition exchange is the tiny
     bucket-totals frame, and the data shuffles exactly once
@@ -242,6 +244,37 @@ def test_fused_report_kernel_reads_only_tokens(spark, sf_dir):
               and "MapInArrow" not in [b[1] for b in _below(tree, i)]]
     assert len(kernel) == 1, tree
     assert re.search(rf"\({kernel[0]}\) MapInArrow\s*\nInput \[1\]: \[tokens#", p), p
+
+
+def test_parse_tier_stats_aggregates_one_parse(spark, sf_dir):
+    """parse_tier_stats has no kernel of its own: one MapInArrow, sent
+    only the tokens and returning only the per-row tier, under the
+    partial and final halves of one global aggregate."""
+    from nginx_log_spark.parity import events_with_log_columns
+    from nginx_log_spark.parse import parse_tier_stats
+
+    p = plan(parse_tier_stats(events_with_log_columns(spark, sf_dir)))
+    tree = _tree(p)
+    ops = [i for i, n in enumerate(tree) if n[1] == "MapInArrow"]
+    assert len(ops) == 1, tree
+    assert re.search(rf"\({tree[ops[0]][2]}\) MapInArrow\nInput \[1\]: \[tokens#\d+\]\n"
+                     r"Arguments: op\(tokens#\d+\)#\d+, \[tier#\d+\]", p), p
+    aggs = [tree[j][2] for j in _above(tree, ops[0]) if tree[j][1] == "HashAggregate"]
+    assert len(aggs) == 2 and sum(n[1] == "HashAggregate" for n in tree) == 2, tree
+    assert all(re.search(rf"\({a}\) HashAggregate\nInput .*\nKeys: \[\]\n", p) for a in aggs), p
+
+
+def test_valid_only_parse_reads_only_tokens(spark, sf_dir):
+    """A valid-only parse that echoes no input column is sent only the
+    tokens, however wide its input."""
+    from nginx_log_spark.parity import events_with_log_columns
+    from nginx_log_spark.parse import parse_sequences_arrow
+
+    seq = events_with_log_columns(spark, sf_dir)
+    p = plan(parse_sequences_arrow(seq, fields=["valid"], keep_cols=[]))
+    assert len(re.findall(r"\(\d+\) MapInArrow\n", p)) == 1, p
+    assert re.search(r"\) MapInArrow\nInput \[1\]: \[tokens#\d+\]\n"
+                     r"Arguments: op\(tokens#\d+\)#\d+, \[valid#\d+\]", p), p
 
 
 @pytest.mark.parametrize("op", ["ngram_jaccard_pairs", "split_contamination"])

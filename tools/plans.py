@@ -40,6 +40,7 @@ def main() -> None:
     )
     from nginx_log_spark.cli import report_frames
     from nginx_log_spark.parity import events_with_log_columns, parsed_log_df
+    from nginx_log_spark.parse import parse_tier_stats
     from nginx_log_spark.reports.reports import fused_reports_arrow
     from nginx_log_spark.session import get_spark
 
@@ -72,6 +73,15 @@ def main() -> None:
         "(Generate); the echo is a second, valid-only mapInArrow sent only "
         "(line, pos), returning (line, pos, valid).",
         plan(fused) + "\n\n" + plan(rejects),
+    ))
+
+    sections.append((
+        "parse_tier_stats (tier telemetry)",
+        "An aggregate of the parser's per-row tier: one mapInArrow, sent "
+        "only the raw column and returning only the int8 tier (the "
+        "valid-only boolean match kernel plus the exact tier over its "
+        "misses), under one global aggregate; no kernel of its own.",
+        plan(parse_tier_stats(seq)),
     ))
 
     parsed = parsed_log_df(spark, SF).filter(F.col("valid"))
